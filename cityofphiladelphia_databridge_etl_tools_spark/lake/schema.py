@@ -13,7 +13,7 @@ promotes the table column type; everything else is a hard error.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,22 +73,23 @@ def evolve_schema(current: T.StructType, incoming: T.StructType) -> T.StructType
     return T.StructType(out)
 
 
+def coerce_expr(have: dict[str, T.StructField], f: T.StructField) -> Column:
+    """Column ``f.name`` of a frame whose fields are ``have``, projected
+    onto ``f``'s type: as is, cast, or a typed null when absent."""
+    src = have.get(f.name)
+    if src is None:
+        return F.lit(None).cast(f.dataType).alias(f.name)
+    if src.dataType == f.dataType:
+        return F.col(f.name)
+    return F.col(f.name).cast(f.dataType).alias(f.name)
+
+
 def coerce_to(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project df onto schema: cast matching columns, fill missing with
     typed nulls, drop extras NOT in schema (caller evolves first if it
     wants them kept). Pure column expressions — whole-stage codegen."""
     have = {f.name: f for f in df.schema.fields}
-    cols = []
-    for f in schema.fields:
-        if f.name in have:
-            src = have[f.name]
-            if src.dataType == f.dataType:
-                cols.append(F.col(f.name))
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+    return df.select(*[coerce_expr(have, f) for f in schema.fields])
 
 
 def apply_column_mappings(df: DataFrame, mappings: dict[str, str]) -> DataFrame:

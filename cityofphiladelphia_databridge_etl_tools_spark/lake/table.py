@@ -19,10 +19,12 @@ read-side window sees all of them.
 
 The merge dataflow:
 
-    changes ──(coerce/evolve schema)──► staged
-    staged ──distinct bucket ids──► touched    (bucket pruning: O(touched))
-    cow: read(touched) ∪ staged ──LWW window──► rewrite buckets
-    mor: staged ──LWW window (batch only)──► append delta files
+    changes ──(evolve schema; one projection: coerce, _deleted, bad-row
+               flag, _bucket, _salt; observe input; drop bad rows)──► staged
+    mor: staged ──(bucket, salt) exchange + LWW window──► observe output
+               ──► append delta files (touched buckets = written dirs)
+    cow: staged ──distinct bucket ids──► touched    (bucket pruning)
+         read(touched) ∪ staged ──LWW window──► rewrite buckets
     log delta record (CAS create = commit)     (ref db2.py:548-565)
 
 Scale behavior: buckets bound the unit of rewrite; hot conversations
@@ -30,13 +32,17 @@ are salted across writers inside a bucket; files are written sorted by
 key so parquet min/max stats support row-group skipping; AQE handles
 residual shuffle skew. Metadata cost per commit is O(batch), not
 O(table) — see lake/manifest.py. Per-file stats (rows, order-column
-min/max) come from a distributed one-column scan of the just-written
-files, not driver-side footer reads, so any Hadoop-compatible root
-works.
+min/max) of merge deltas and plain-fold compactions come from an
+Observation riding the write job plus a listing of the writer-private
+snapshot directory. COW rewrites, layout rewrites (sort_by /
+zorder_by), rebucket and full refresh get exact per-file stats from a
+distributed one-column scan of the just-written files, not driver-side
+footer reads, so any Hadoop-compatible root works.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
@@ -50,6 +56,7 @@ from pyspark.sql.observation import Observation
 from ..operators.merge import (
     DELETED_COL,
     bucket_expr,
+    colocated_lww,
     dedup_last_writer,
     dedup_last_writer_colocated,
     salt_expr,
@@ -62,13 +69,16 @@ from .manifest import (
     MetaStore,
     SchemaVersion,
 )
-from .schema import coerce_to, evolve_schema
+from .schema import coerce_expr, coerce_to, evolve_schema
 
 OP_COL = "op"
 BASE, DELTA = "base", "delta"
 # tombstone-GC horizon meaning "all tombstones purged, no lsn bound
 # known" (bare gc_tombstones on a table with no integer watermarks)
 GC_ALL_SENTINEL = 2**62
+# the write clustering of merges and plain-fold compaction: one exchange
+# by (bucket, salt), both pure functions of the key
+PART_COLS = ["_bucket", "_salt"]
 
 
 def _with_deleted(schema: T.StructType) -> T.StructType:
@@ -100,6 +110,90 @@ def _as_lsn(v) -> int:
         return -1
 
 
+class _MergePlan:
+    """The Column expressions of a merge window for one table shape,
+    built once and reused by every window of that shape (see
+    ``LakeTable.merge_batch``): DataFrame calls are analysed eagerly
+    and every expression is built over Py4J, so rebuilding them per
+    window dominated small windows. Only the Observations are new per
+    window."""
+
+    def __init__(
+        self, key: tuple, incoming: T.StructType, stored: T.StructType, m: Manifest,
+        n_salt: int,
+    ):
+        self.key = key
+        keys, oc = m.key_columns, m.order_columns[-1]
+        have = {f.name: f for f in incoming.fields}
+        coerced = {
+            f.name: coerce_expr(have, f) for f in stored.fields if f.name != DELETED_COL
+        }
+        coerced[DELETED_COL] = (F.col(OP_COL) == F.lit("D")).alias(DELETED_COL)
+        # null ORDER columns are legal (desc_nulls_last: they just lose
+        # ties); only unknown ops and null KEYS are malformed
+        self.bad = ~F.col(OP_COL).isin("I", "U", "D")
+        for c in keys:
+            self.bad = self.bad | F.col(c).isNull()
+        # one projection: stored columns, the bad-row flag, and bucket
+        # and salt hashed from the COERCED key values — the values the
+        # stored rows (and read_key's driver-side hash) carry
+        self.stage = [
+            *(coerced[c] for c in stored.names),
+            self.bad.alias("_bad"),
+            bucket_expr(
+                [coerced[c] for c in m.effective_bucket_columns], m.n_buckets
+            ).alias("_bucket"),
+            salt_expr(n_salt, *(coerced[k] for k in keys)).alias("_salt"),
+        ]
+        good_oc = F.when(~F.col("_bad"), F.col(oc))
+        self.in_aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("_bad").cast("long")).alias("n_bad"),
+            F.min(good_oc).alias("lsn_lo"),
+            F.max(good_oc).alias("lsn_hi"),
+        ]
+        self.good = ~F.col("_bad")
+        self.lww_prev, self.lww_first = colocated_lww(
+            keys, m.order_columns, PART_COLS, stored.names
+        )
+        # everything the manifest needs about the written rows — row
+        # count, per-bucket counts, order-column and stats-column
+        # bounds — so no read-back job is required for delta files (see
+        # _list_snapshot_files). Bounded: n_buckets conditional sums +
+        # 2 aggs per stats column.
+        scols = [c for c in m.stats_columns if c in stored.names and c != oc]
+        self.out_aggs = [
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
+            F.min(F.col(oc)).alias("f_lo"),
+            F.max(F.col(oc)).alias("f_hi"),
+            *[x for c in scols for x in (
+                F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
+            )],
+            *[
+                F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
+                for b in range(m.n_buckets)
+            ],
+        ]
+        self.out_cols = [*stored.names, "_bucket"]
+
+    def staged(self, changes: DataFrame, obs_in: Observation) -> DataFrame:
+        """The batch's good rows, coerced, bucketed and salted;
+        ``obs_in`` counts every row and the bad ones."""
+        return changes.select(*self.stage).observe(obs_in, *self.in_aggs).filter(self.good)
+
+    def winners(self, staged: DataFrame, obs_out: Observation) -> DataFrame:
+        """The LWW winner of each key, clustered for the bucket write:
+        one (bucket, salt) exchange and sort (operators.merge
+        colocated_lww); ``obs_out`` rides it with the manifest stats."""
+        return (
+            staged.select("*", *self.lww_prev)
+            .filter(self.lww_first)
+            .observe(obs_out, *self.out_aggs)
+            .select(*self.out_cols)
+        )
+
+
 class LakeTable:
     """One lake table = directory + commit log. Multi-writer safe via
     CAS on the log position (losers reload and retry)."""
@@ -124,6 +218,7 @@ class LakeTable:
         # diagnostics: commit races this HANDLE lost and rebased (the
         # multi-writer contention soak reads it; not persisted)
         self.commit_races_lost = 0
+        self._plan: _MergePlan | None = None  # see _merge_plan
         if not self.store.exists():
             raise FileNotFoundError(f"no lake table at {root} (use LakeTable.create)")
 
@@ -331,6 +426,15 @@ class LakeTable:
         never stalls behind an O(table) inline rewrite; mode="cow"
         rewrites the touched buckets fully.
 
+        Plan cache: the Column expressions of a window — the staging
+        projection, the input and output observation aggregates, and
+        the colocated LWW window — are built once per table shape and
+        kept in one slot on this handle. The key is the incoming batch
+        schema, the stored schema (after evolution), ``n_buckets``, the
+        bucket columns, ``n_salt`` and the stats columns; a change to
+        any of them rebuilds the plan. A window then costs a few
+        DataFrame calls and two new Observations.
+
         Concurrency: on a lost commit race, MOR batches (whose file
         appends and watermark bumps commute under LWW) are rebased onto
         the winner's manifest and re-CAS'd automatically, up to
@@ -360,36 +464,21 @@ class LakeTable:
         m = self.manifest
         if batch_id in m.applied_batch_ids:
             return None
-        if OP_COL not in changes.columns:
+        incoming = changes.schema
+        if OP_COL not in incoming.names:
             raise ValueError("changes must carry an 'op' column (I/U/D)")
         keys, order_cols = m.key_columns, m.order_columns
         # fail fast (before any files are written) on a batch that
         # cannot be LWW-merged at all — missing key/order columns
-        missing = [c for c in keys + order_cols if c not in changes.columns]
+        missing = [c for c in keys + order_cols if c not in incoming.names]
         if missing:
             raise ValueError(
                 f"changes batch {batch_id!r} lacks key/order column(s) {missing}"
             )
-        oc = order_cols[-1]  # the LSN-like column watermarks track
-
-        # bad rows: unknown op, or null key columns. They are filtered
-        # in-plan and COUNTED by the same observation that rides the
-        # main write job (zero extra jobs on the happy path); if any
-        # existed, we either abort BEFORE the commit point (files
-        # orphan, replay reconverges) or dead-letter them with one
-        # extra job (ref: AGO error-row sink, ago/ago.py:319-344 — the
-        # pipeline continues).
-        # null ORDER columns are legal (desc_nulls_last: they just lose
-        # ties); only unknown ops and null KEYS are malformed.
-        bad_cond = ~F.col(OP_COL).isin("I", "U", "D")
-        for c in keys:
-            bad_cond = bad_cond | F.col(c).isNull()
-        raw_changes = changes
-        changes = changes.withColumn("_bad", bad_cond)
 
         # -- schema evolution on the incoming payload shape
         payload_schema = T.StructType(
-            [f for f in changes.schema.fields if f.name not in (OP_COL, "_bad")]
+            [f for f in incoming.fields if f.name not in (OP_COL, "_bad")]
         )
         current = self.schema(m)
         new_schema = evolve_schema(current, payload_schema)
@@ -401,35 +490,31 @@ class LakeTable:
             current = new_schema
         current_version = (m.schema_versions + schema_added)[-1].version
         stored_schema = _with_deleted(current)
+        plan = self._merge_plan(incoming, stored_schema, m, n_salt)
 
-        # -- stage: mark deletes, coerce to table schema
-        obs_in = Observation()
-        staged = changes.observe(
-            obs_in,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("_bad").cast("long")).alias("n_bad"),
-            F.min(F.when(~F.col("_bad"), F.col(oc))).alias("lsn_lo"),
-            F.max(F.when(~F.col("_bad"), F.col(oc))).alias("lsn_hi"),
-        ).filter(~F.col("_bad")).drop("_bad")
-        staged = coerce_to(
-            staged.withColumn(DELETED_COL, F.col(OP_COL) == F.lit("D")).drop(OP_COL),
-            stored_schema,
-        ).withColumn("_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets))
-
-        obs_out = Observation()
+        # -- stage: coerce to the table schema, mark deletes, bucket and
+        # salt. Bad rows (unknown op, or null key columns) are filtered
+        # in-plan and COUNTED by the observation that rides the write
+        # job (zero extra jobs on the happy path); if any existed, we
+        # either abort BEFORE the commit point (files orphan, replay
+        # reconverges) or dead-letter them with one extra job (ref: AGO
+        # error-row sink, ago/ago.py:319-344 — the pipeline continues).
+        obs_in, obs_out = Observation(), Observation()
+        in_stats = functools.cache(lambda: obs_in.get)
+        out_stats = functools.cache(lambda: obs_out.get)
+        staged = plan.staged(changes, obs_in)
         snap_rel = f"data/snap-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
         persisted = None
-        part_cols = ["_bucket", "_salt"]
         if mode == "cow":
             # COW needs the touched-bucket set BEFORE reading the
             # target → one probe job over the (persisted) batch.
-            persisted = staged.persist()
+            persisted = staged.select(*plan.out_cols).persist()
             touched = sorted(
                 r["_bucket"] for r in persisted.select("_bucket").distinct().collect()
             )
             if not touched:  # empty batch still commits (advances the log)
                 persisted.unpersist()
-                self._handle_bad_rows(obs_in, raw_changes, bad_cond, batch_id, on_bad_rows)
+                self._handle_bad_rows(in_stats, changes, plan.bad, batch_id, on_bad_rows)
                 return self._commit_empty(m, batch_id, schema_added)
             target = coerce_to(
                 self.read(buckets=touched, include_deleted=True, manifest=m),
@@ -441,59 +526,38 @@ class LakeTable:
             # ONE exchange by (bucket, salt) + sort resolves intra-batch
             # duplicates AND batch-vs-target conflicts, pre-clustered
             # for the bucket-partitioned write (no second shuffle).
-            merged = dedup_last_writer_colocated(unioned, keys, order_cols, part_cols)
+            merged = dedup_last_writer_colocated(
+                unioned, keys, order_cols, PART_COLS, stored_schema.names
+            )
             out_rows = merged.observe(
                 obs_out,
                 F.sum(F.col("_src").cast("long")).alias("from_batch"),
                 F.sum((F.col("_src") & F.col(DELETED_COL)).cast("long")).alias("deletes"),
-            ).drop("_src")
+            ).drop("_src", "_salt")
             tier = BASE
         else:
             # MOR fast path: single exchange+sort straight into the
             # delta write; the write's output directories reveal the
             # touched buckets (no probe job).
-            winners = dedup_last_writer_colocated(
-                staged.withColumn("_salt", salt_expr(n_salt, *keys)),
-                keys, order_cols, part_cols,
-            )
-            # one observation rides the write job carrying EVERYTHING
-            # the manifest needs about the written rows — per-bucket
-            # counts, order-column bounds, stats-column bounds — so no
-            # read-back job is required for delta files (see
-            # _list_snapshot_files). Bounded: n_buckets conditional
-            # sums + 2 aggs per stats column.
-            scols = [c for c in m.stats_columns if c in staged.columns and c != oc]
-            obs_aggs = [
-                F.count(F.lit(1)).alias("from_batch"),
-                F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
-                F.min(F.col(oc)).alias("f_lo"),
-                F.max(F.col(oc)).alias("f_hi"),
-                *[x for c in scols for x in (
-                    F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
-                )],
-                *[
-                    F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
-                    for b in range(m.n_buckets)
-                ],
-            ]
-            out_rows = winners.observe(obs_out, *obs_aggs)
+            out_rows = plan.winners(staged, obs_out)
             tier = DELTA
 
         new_files, bucket_rows = self._write_snapshot(
-            out_rows.drop("_salt"), snap_rel, current_version, tier, m, pre_clustered=True,
-            batch_stats=(lambda: obs_out.get) if mode == "mor" else None,
+            out_rows, snap_rel, current_version, tier, m, pre_clustered=True,
+            batch_stats=out_stats if mode == "mor" else None,
         )
         if persisted is not None:
             persisted.unpersist()
         # bad rows surfaced by the write's observation: abort (before
         # the commit point — the just-written files orphan) or capture
-        n_bad = self._handle_bad_rows(obs_in, raw_changes, bad_cond, batch_id, on_bad_rows)
+        n_bad = self._handle_bad_rows(in_stats, changes, plan.bad, batch_id, on_bad_rows)
         if mode == "mor":
             touched = sorted(int(b) for b in new_files)
             if not touched:
                 return self._commit_empty(m, batch_id, schema_added)
 
-        in_metrics, out_metrics = obs_in.get, obs_out.get
+        in_metrics, out_metrics = in_stats(), out_stats()
+        from_batch = int(out_metrics["rows" if mode == "mor" else "from_batch"])
         # all-null / non-integer order columns are legal — watermarks
         # just don't move
         lsn_lo = _as_lsn(in_metrics["lsn_lo"])
@@ -503,8 +567,8 @@ class LakeTable:
             lsn_lo=lsn_lo,
             lsn_hi=lsn_hi,
             rows_in=int(in_metrics["n"]) - n_bad,
-            rows_deduped=int(out_metrics["from_batch"]),
-            rows_upserted=int(out_metrics["from_batch"]) - int(out_metrics["deletes"] or 0),
+            rows_deduped=from_batch,
+            rows_upserted=from_batch - int(out_metrics["deletes"] or 0),
             rows_deleted=int(out_metrics["deletes"] or 0),
             touched_buckets=[int(b) for b in touched],
             committed_at=MetaStore.now(),
@@ -588,14 +652,31 @@ class LakeTable:
                     pass  # another writer got there; next batch re-checks
         return rec
 
+    def _merge_plan(
+        self, incoming: T.StructType, stored: T.StructType, m: Manifest, n_salt: int
+    ) -> _MergePlan:
+        """The cached plan for this table shape, rebuilt when any input
+        it depends on changes. One slot: shapes change rarely (schema
+        evolution, rebucket). Pipelined windows may both rebuild it on
+        a change; either result is correct."""
+        key = (
+            incoming.json(), stored.json(), m.n_buckets,
+            tuple(m.effective_bucket_columns), n_salt, tuple(m.stats_columns),
+        )
+        plan = self._plan
+        if plan is None or plan.key != key:
+            plan = self._plan = _MergePlan(key, incoming, stored, m, n_salt)
+        return plan
+
     def _handle_bad_rows(
-        self, obs_in: Observation, raw_changes: DataFrame, bad_cond, batch_id: str, policy: str
+        self, in_stats, raw_changes: DataFrame, bad_cond, batch_id: str, policy: str
     ) -> int:
-        """Post-job bad-row policy. Returns the bad count. Called
-        strictly BEFORE the commit point, so a 'fail' leaves only
-        orphan files and a replay reconverges."""
+        """Post-job bad-row policy over ``in_stats()``, the input
+        observation's metrics. Returns the bad count. Called strictly
+        BEFORE the commit point, so a 'fail' leaves only orphan files
+        and a replay reconverges."""
         try:
-            n_bad = int(obs_in.get["n_bad"] or 0)
+            n_bad = int(in_stats()["n_bad"] or 0)
         except Exception:
             # a zero-task job (everything filtered) can leave the
             # observation unpopulated — fall back to counting directly
@@ -659,13 +740,15 @@ class LakeTable:
         directory listing or local footer parsing, so any
         Hadoop-compatible root (s3a://, gs://) works.
 
-        ``batch_stats``: zero-extra-job stats for DELTA appends — a
-        callable (evaluated after the write job, so it may read an
-        Observation that rode it) returning the write's metrics:
-        per-bucket row counts plus batch-level order/stats-column
-        bounds. Per-file bounds degrade to the batch's — sound
-        (conservative) for pruning, and free of information in the
-        windowed-ingest case, where one batch IS one LSN window so
+        ``batch_stats``: zero-extra-job stats for pre-clustered writes —
+        a callable (evaluated after the write job, so it may read an
+        Observation that rode it) returning the write's metrics: the
+        written row count ``rows`` (which alone decides whether the
+        write was empty), per-bucket row counts (delta appends) plus
+        batch-level order/stats-column bounds. Per-file bounds degrade
+        to the batch's — sound (conservative) for pruning, and free of
+        information in the windowed-ingest case, where one batch IS one
+        LSN window so
         every file of the batch spans the same range anyway. Exact
         per-file bounds only pay off for compaction-sorted BASE
         files, which keep the distributed stats scan.
@@ -704,14 +787,19 @@ class LakeTable:
             )
         out.write.partitionBy("_bucket").parquet(snap_dir, mode="errorifexists")
 
+        met = {}
         if batch_stats is not None:
-            if not self.store.fs.exists(snap_dir):
-                return {}, {}  # every row filtered: no directory, no files
             try:
                 met = batch_stats() or {}
             except Exception:
                 met = {}  # zero-task plans can leave the observation empty
             if met:
+                # emptiness comes from the write's own row count, never
+                # from a directory probe: an object store has no
+                # directories, so "does snap_dir exist" is false there
+                # even after a non-empty write
+                if not met["rows"]:
+                    return {}, {}  # every row filtered: no files
                 files, rows = self._list_snapshot_files(
                     snap_rel, schema_version, tier, m, met
                 )
@@ -736,8 +824,9 @@ class LakeTable:
             # the commit point — a bare except here once conflated a
             # transient read error with an empty write, committing the
             # batch id with zero files and losing the rows permanently
-            # (replay blocked by exactly-once).
-            if self.store.fs.exists(snap_dir):
+            # (replay blocked by exactly-once). A write observed to be
+            # non-empty (``met``) is never absent.
+            if met or self.store.fs.exists(snap_dir):
                 raise
             return {}, {}
         oc_col = F.col(oc) if oc in back.columns else F.lit(None)
@@ -1315,17 +1404,17 @@ class LakeTable:
                 # manifest stats — no resolve shuffle, no repartition,
                 # no read-back stats job. Layout rewrites (sort_by /
                 # zorder_by) keep the range-partitioned path below,
-                # where exact per-file stats are the point.
+                # where exact per-file stats are the point. The
+                # tiebreak hashes the stored columns in read()'s order,
+                # so the fold keeps the version read() shows.
+                raw = self.read(
+                    buckets=targets, include_deleted=True, manifest=m, resolve=False,
+                )
                 df = dedup_last_writer_colocated(
-                    self.read(
-                        buckets=targets, include_deleted=True, manifest=m,
-                        resolve=False,
-                    )
-                    .withColumn(
+                    raw.withColumn(
                         "_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets)
-                    )
-                    .withColumn("_salt", salt_expr(4, *m.key_columns)),
-                    m.key_columns, m.order_columns, ["_bucket", "_salt"],
+                    ).withColumn("_salt", salt_expr(4, *m.key_columns)),
+                    m.key_columns, m.order_columns, PART_COLS, raw.columns,
                 )
             else:
                 df = self.read(buckets=targets, include_deleted=True, manifest=m)
@@ -1374,6 +1463,7 @@ class LakeTable:
                 scols = [c for c in m.stats_columns if c in df.columns and c != oc]
                 df = df.observe(
                     obs,
+                    F.count(F.lit(1)).alias("rows"),
                     F.min(F.col(oc)).alias("f_lo"),
                     F.max(F.col(oc)).alias("f_hi"),
                     *[x for c in scols for x in (

@@ -47,19 +47,28 @@ def bucket_expr(key_cols: str | Column | list, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
-def salt_expr(n_salt: int, *cols: str) -> Column:
+def salt_expr(n_salt: int, *cols: str | Column) -> Column:
     """Salt within a bucket to spread a hot key over n_salt write tasks."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salt)).cast("int")
+    return F.pmod(
+        F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols]), F.lit(n_salt)
+    ).cast("int")
 
 
-def payload_tiebreak(df: DataFrame) -> Column:
-    """Deterministic final sort key: xxhash64 over every column. Rows
-    with equal keys AND equal order columns but different payloads
-    would otherwise get a nondeterministic winner (row_number over a
-    non-total order), making replays/retries diverge. Identical rows
-    hash identically, so duplicate delivery still collapses to the
-    same row; distinct payloads get a stable, if arbitrary, winner."""
-    return F.xxhash64(*[F.col(c) for c in df.columns])
+def payload_tiebreak(df: DataFrame | list[str]) -> Column:
+    """Deterministic final sort key: xxhash64 over every column of
+    ``df`` (or over the named columns, in order). Rows with equal keys
+    AND equal order columns but different payloads would otherwise get
+    a nondeterministic winner (row_number over a non-total order),
+    making replays/retries diverge. Identical rows hash identically, so
+    duplicate delivery still collapses to the same row; distinct
+    payloads get a stable, if arbitrary, winner.
+
+    Every LWW path of a lake table must hash the same columns in the
+    same order — the stored columns (payload + ``_deleted``), as
+    ``read()`` sees them — or merge, compaction and read could pick
+    different winners on an order-column tie."""
+    cols = df.columns if isinstance(df, DataFrame) else df
+    return F.xxhash64(*[F.col(c) for c in cols])
 
 
 def lww_rank(keys: list[str], order_cols: list[str], tiebreak: Column | None = None) -> Column:
@@ -88,11 +97,37 @@ def dedup_last_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> 
     )
 
 
+def colocated_lww(
+    keys: list[str],
+    order_cols: list[str],
+    part_cols: list[str],
+    tiebreak_cols: list[str],
+) -> tuple[list[Column], Column]:
+    """The window expressions of the colocated LWW dedup: ``prev`` lags
+    each key over the (part_cols)-partitioned sort on (keys asc, order
+    desc, payload hash of ``tiebreak_cols`` desc); ``first`` is true on
+    the first — winning — row of each key run. Apply them as
+    ``df.select("*", *prev).filter(first)``. Built once, the Columns can
+    be reused on any frame carrying those columns (lake/table.py caches
+    them per table shape)."""
+    w = Window.partitionBy(*part_cols).orderBy(
+        *[F.col(k).asc() for k in keys],
+        *[F.col(c).desc_nulls_last() for c in order_cols],
+        payload_tiebreak(tiebreak_cols).desc(),
+    )
+    prev = [F.lag(F.col(k)).over(w).alias(f"_prev_{k}") for k in keys]
+    first = F.lit(False)
+    for k in keys:
+        first = first | F.col(f"_prev_{k}").isNull() | (F.col(f"_prev_{k}") != F.col(k))
+    return prev, first
+
+
 def dedup_last_writer_colocated(
     df: DataFrame,
     keys: list[str],
     order_cols: list[str],
     part_cols: list[str],
+    tiebreak_cols: list[str],
 ) -> DataFrame:
     """LWW dedup when ``part_cols`` is a pure function of ``keys``
     (e.g. (bucket, salt) derived from the key hash): exchange once by
@@ -101,19 +136,11 @@ def dedup_last_writer_colocated(
     bucket-partitioned write, and the sort prefix satisfies the
     dynamic-partition writer's required ordering. This halves the
     shuffles of the merge hot path. The payload-hash tail makes the
-    sort a total order (deterministic winner on order-column ties).
+    sort a total order (deterministic winner on order-column ties);
+    it hashes ``tiebreak_cols`` (see payload_tiebreak).
     """
-    w = Window.partitionBy(*part_cols).orderBy(
-        *[F.col(k).asc() for k in keys],
-        *[F.col(c).desc_nulls_last() for c in order_cols],
-        payload_tiebreak(df).desc(),
-    )
-    prev = [F.lag(F.col(k)).over(w).alias(f"_prev_{k}") for k in keys]
-    marked = df.select("*", *prev)
-    is_first = F.lit(False)
-    for k in keys:
-        is_first = is_first | F.col(f"_prev_{k}").isNull() | (F.col(f"_prev_{k}") != F.col(k))
-    return marked.filter(is_first).drop(*[f"_prev_{k}" for k in keys])
+    prev, first = colocated_lww(keys, order_cols, part_cols, tiebreak_cols)
+    return df.select("*", *prev).filter(first).drop(*[f"_prev_{k}" for k in keys])
 
 
 def merge_lww(

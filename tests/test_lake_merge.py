@@ -932,3 +932,70 @@ def test_read_race_classifier_is_file_missing_only(spark, tmp_path):
     assert sched.errors >= 1
     assert sched.last_error is boom
     assert sched.races_lost >= 5  # the pre-escalation cycles still counted
+
+
+def test_writes_on_object_store_fs_keep_every_row(spark, tmp_path):
+    """An object store has no directories: a HEAD on a prefix finds
+    nothing even after files were written under it. A MOR merge and a
+    plain-fold compact() must decide "nothing was written" from the
+    write's own row count, not from such a probe, or they commit the
+    batch (or the fold) with zero files."""
+    import os
+
+    from cityofphiladelphia_databridge_etl_tools_spark.lake.fs import LocalFS
+
+    class NoDirsFS(LocalFS):
+        def exists(self, path):
+            return os.path.exists(path) and not os.path.isdir(path)
+
+    t = make_table(spark, tmp_path)
+    t.store.fs = NoDirsFS()
+    stream = changegen.changes(spark, 1000, seed=87)
+    want = changegen.expected_final_state(stream)
+    for k in range(2):
+        t.merge_batch(stream.filter((F.col("lsn") >= k * 500) & (F.col("lsn") < (k + 1) * 500)), f"b{k}")
+    assert_df_equal(t.read(), want)
+    t.compact()
+    assert all(e[2] == "base" for v in t.manifest.bucket_files.values() for e in v)
+    assert_df_equal(t.read(), want)
+
+
+def test_merge_plan_follows_table_shape(spark, tmp_path):
+    """One handle merges batches that change the inputs of the cached
+    merge plan one step at a time: a new column (batch and stored
+    schema), a key column in a narrower int type plus a missing payload
+    column (batch schema only), and a new bucket count (nothing else).
+    A plan reused across any step would mis-coerce or mis-bucket rows."""
+    # turn_idx starts nullable, so widening a narrower batch type into
+    # it leaves the stored schema as it is
+    narrow = T.StructType([
+        T.StructField(f.name, f.dataType, f.nullable or f.name == "turn_idx")
+        for f in TRANSCRIPT_SCHEMA.fields if f.name != "tool"
+    ])
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), narrow,
+        key_columns=["conv_id", "turn_idx"], order_columns=["ts", "lsn"], n_buckets=4,
+    )
+    stream = changegen.changes(spark, 2000, seed=89)
+
+    def window(k):
+        return stream.filter((F.col("lsn") >= k * 500) & (F.col("lsn") < (k + 1) * 500))
+
+    def short_key_no_role(df):
+        return df.withColumn("turn_idx", F.col("turn_idx").cast("short")).drop("role")
+
+    t.merge_batch(window(0).drop("tool"), "b0")
+    t.merge_batch(window(1), "b1")  # adds `tool`
+    schema_after_b1 = t.schema().json()
+    t.merge_batch(short_key_no_role(window(2)), "b2")
+    assert t.schema().json() == schema_after_b1
+    t.rebucket(8)
+    t.merge_batch(short_key_no_role(window(3)), "b3")
+
+    lsn = F.col("lsn")
+    applied = stream.withColumn(
+        "tool", F.when(lsn >= 500, F.col("tool"))
+    ).withColumn("role", F.when(lsn < 1000, F.col("role")))
+    got = t.read()
+    assert dict(got.dtypes)["turn_idx"] == "int"
+    assert_df_equal(got, changegen.expected_final_state(applied))

@@ -46,23 +46,15 @@ def test_mor_merge_is_single_exchange(spark, tmp_path):
         ["conv_id", "turn_idx"], ["ts", "lsn"], n_buckets=8,
     )
     t.merge_batch(changegen.changes(spark, 500, seed=31), "b0")
-    # reconstruct the write-side plan the merge runs (same code path)
-    from cityofphiladelphia_databridge_etl_tools_spark.lake.schema import coerce_to
+    # the write-side plan of the next window, from the plan cache the
+    # merge itself uses
+    from pyspark.sql.observation import Observation
+
     from cityofphiladelphia_databridge_etl_tools_spark.lake.table import _with_deleted
-    from cityofphiladelphia_databridge_etl_tools_spark.operators.merge import (
-        bucket_expr, dedup_last_writer_colocated, salt_expr,
-    )
 
     ch = changegen.changes(spark, 500, seed=31, lsn_start=500)
-    staged = coerce_to(
-        ch.withColumn("_deleted", F.col("op") == "D").drop("op"),
-        _with_deleted(t.schema()),
-    ).withColumn("_bucket", bucket_expr("conv_id", 8)).withColumn(
-        "_salt", salt_expr(4, "conv_id", "turn_idx")
-    )
-    winners = dedup_last_writer_colocated(
-        staged, ["conv_id", "turn_idx"], ["ts", "lsn"], ["_bucket", "_salt"]
-    )
+    plan = t._merge_plan(ch.schema, _with_deleted(t.schema()), t.manifest, 4)
+    winners = plan.winners(plan.staged(ch, Observation()), Observation())
     assert count_exchanges(winners) == 1, formatted_plan(winners)
 
 
