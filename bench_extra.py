@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -83,7 +84,6 @@ def dump_plans(names: list[str], when: str = "before") -> None:
 def merge_phases(n_events: int = 1_000_000) -> None:
     """One MOR merge_batch, phase-timed: stage off-clock, then time the
     full merge and the read-resolve, mirroring run_ingest's unit."""
-    import shutil
     import tempfile
 
     from cityofphiladelphia_databridge_etl_tools_spark import changegen

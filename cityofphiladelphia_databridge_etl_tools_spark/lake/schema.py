@@ -90,11 +90,3 @@ def coerce_to(df: DataFrame, schema: T.StructType) -> DataFrame:
     wants them kept). Pure column expressions — whole-stage codegen."""
     have = {f.name: f for f in df.schema.fields}
     return df.select(*[coerce_expr(have, f) for f in schema.fields])
-
-
-def apply_column_mappings(df: DataFrame, mappings: dict[str, str]) -> DataFrame:
-    """Rename incoming-stream columns per a mapping dict — the
-    reference's --column_mappings step (postgres/postgres.py:203-228),
-    plus its header sanitization is in operators.transforms."""
-    present = {k: v for k, v in mappings.items() if k in df.columns}
-    return df.withColumnsRenamed(present) if present else df

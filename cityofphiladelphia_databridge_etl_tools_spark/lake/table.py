@@ -25,6 +25,9 @@ The merge dataflow:
                ──► append delta files (touched buckets = written dirs)
     cow: staged ──distinct bucket ids──► touched    (bucket pruning)
          read(touched) ∪ staged ──LWW window──► rewrite buckets
+    rewrite: raw stored rows ──_bucket, _salt; (bucket, salt) exchange +
+               LWW window──► observe output ──► base files  (plain-fold
+               compact, rebucket, full refresh: LakeTable._fold)
     log delta record (CAS create = commit)     (ref db2.py:548-565)
 
 Scale behavior: buckets bound the unit of rewrite; hot conversations
@@ -32,23 +35,24 @@ are salted across writers inside a bucket; files are written sorted by
 key so parquet min/max stats support row-group skipping; AQE handles
 residual shuffle skew. Metadata cost per commit is O(batch), not
 O(table) — see lake/manifest.py. Per-file stats (rows, order-column
-min/max) of merge deltas and plain-fold compactions come from an
+min/max) of merge deltas and of every fold rewrite come from an
 Observation riding the write job plus a listing of the writer-private
-snapshot directory. COW rewrites, layout rewrites (sort_by /
-zorder_by), rebucket and full refresh get exact per-file stats from a
-distributed one-column scan of the just-written files, not driver-side
-footer reads, so any Hadoop-compatible root works.
+snapshot directory. Only COW rewrites and layout rewrites (sort_by /
+zorder_by) get exact per-file stats from a distributed one-column scan
+of the just-written files, not driver-side footer reads, so any
+Hadoop-compatible root works.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
@@ -76,9 +80,11 @@ BASE, DELTA = "base", "delta"
 # tombstone-GC horizon meaning "all tombstones purged, no lsn bound
 # known" (bare gc_tombstones on a table with no integer watermarks)
 GC_ALL_SENTINEL = 2**62
-# the write clustering of merges and plain-fold compaction: one exchange
-# by (bucket, salt), both pure functions of the key
+# the write clustering of merges and fold rewrites: one exchange by
+# (bucket, salt), both pure functions of the key; N_SALT spreads a hot
+# key over that many write tasks of its bucket
 PART_COLS = ["_bucket", "_salt"]
+N_SALT = 4
 
 
 def _with_deleted(schema: T.StructType) -> T.StructType:
@@ -97,6 +103,30 @@ def _stat_safe(v):
     if isinstance(v, (int, float, str, type(None))):
         return v
     return str(v)
+
+
+def _write_aggs(m: Manifest, names: list[str]) -> list[Column]:
+    """Everything the manifest needs about rows written to ``m``'s
+    buckets — row and tombstone counts, order-column and stats-column
+    bounds, per-bucket row counts — as aggregates for an Observation
+    riding the write job, so no read-back job is needed (see
+    _list_snapshot_files). ``names`` are the written stored columns.
+    Bounded: n_buckets conditional sums + 2 aggs per stats column."""
+    oc = m.order_columns[-1]
+    scols = [c for c in m.stats_columns if c in names and c != oc]
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
+        F.min(F.col(oc)).alias("f_lo"),
+        F.max(F.col(oc)).alias("f_hi"),
+        *[x for c in scols for x in (
+            F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
+        )],
+        *[
+            F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
+            for b in range(m.n_buckets)
+        ],
+    ]
 
 
 def _as_lsn(v) -> int:
@@ -156,25 +186,7 @@ class _MergePlan:
         self.lww_prev, self.lww_first = colocated_lww(
             keys, m.order_columns, PART_COLS, stored.names
         )
-        # everything the manifest needs about the written rows — row
-        # count, per-bucket counts, order-column and stats-column
-        # bounds — so no read-back job is required for delta files (see
-        # _list_snapshot_files). Bounded: n_buckets conditional sums +
-        # 2 aggs per stats column.
-        scols = [c for c in m.stats_columns if c in stored.names and c != oc]
-        self.out_aggs = [
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
-            F.min(F.col(oc)).alias("f_lo"),
-            F.max(F.col(oc)).alias("f_hi"),
-            *[x for c in scols for x in (
-                F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
-            )],
-            *[
-                F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
-                for b in range(m.n_buckets)
-            ],
-        ]
+        self.out_aggs = _write_aggs(m, stored.names)
         self.out_cols = [*stored.names, "_bucket"]
 
     def staged(self, changes: DataFrame, obs_in: Observation) -> DataFrame:
@@ -395,7 +407,7 @@ class LakeTable:
         self,
         changes: DataFrame,
         batch_id: str,
-        n_salt: int = 4,
+        n_salt: int = N_SALT,
         mode: str = "mor",
         compact_threshold: int = 16,
         max_auto_compact_buckets: int = 4,
@@ -407,7 +419,9 @@ class LakeTable:
 
         ``changes`` columns: the table payload columns (any compatible
         subset/superset — schema evolves) plus ``op`` in {I,U,D}. Rows
-        with op=D need only key + order columns populated.
+        with op=D need only key + order columns populated. A batch that
+        would widen a bucket column raises ValueError before any file
+        is written (see _evolve).
 
         Returns the CommitRecord, or None when ``batch_id`` was already
         committed (idempotent replay — ref db2/db2.py:596-655 SCN
@@ -477,18 +491,9 @@ class LakeTable:
             )
 
         # -- schema evolution on the incoming payload shape
-        payload_schema = T.StructType(
-            [f for f in incoming.fields if f.name not in (OP_COL, "_bad")]
+        current, schema_added, current_version = self._evolve(
+            m, T.StructType([f for f in incoming.fields if f.name not in (OP_COL, "_bad")])
         )
-        current = self.schema(m)
-        new_schema = evolve_schema(current, payload_schema)
-        schema_added: list[SchemaVersion] = []
-        if new_schema.json() != current.json():
-            schema_added = [
-                SchemaVersion(len(m.schema_versions), new_schema.json(), MetaStore.now())
-            ]
-            current = new_schema
-        current_version = (m.schema_versions + schema_added)[-1].version
         stored_schema = _with_deleted(current)
         plan = self._merge_plan(incoming, stored_schema, m, n_salt)
 
@@ -543,7 +548,7 @@ class LakeTable:
             tier = DELTA
 
         new_files, bucket_rows = self._write_snapshot(
-            out_rows, snap_rel, current_version, tier, m, pre_clustered=True,
+            out_rows, snap_rel, current_version, tier, m,
             batch_stats=out_stats if mode == "mor" else None,
         )
         if persisted is not None:
@@ -652,6 +657,27 @@ class LakeTable:
                     pass  # another writer got there; next batch re-checks
         return rec
 
+    def _evolve(
+        self, m: Manifest, incoming: T.StructType
+    ) -> tuple[T.StructType, list[SchemaVersion], int]:
+        """The table schema evolved by ``incoming``, the schema versions
+        to log (none when unchanged) and the version the write's files
+        carry. Refuses to change a bucket column's type: xxhash64 hashes
+        an int and a long of equal value differently, so new versions
+        of a key would land in another bucket than the stored ones."""
+        current = self.schema(m)
+        new_schema = evolve_schema(current, incoming)
+        for c in m.effective_bucket_columns:
+            if new_schema[c].dataType != current[c].dataType:
+                raise ValueError(
+                    f"cannot widen bucket column {c!r} from "
+                    f"{current[c].dataType.simpleString()}: send the stored type"
+                )
+        if new_schema.json() == current.json():
+            return current, [], m.schema_versions[-1].version
+        v = len(m.schema_versions)
+        return new_schema, [SchemaVersion(v, new_schema.json(), MetaStore.now())], v
+
     def _merge_plan(
         self, incoming: T.StructType, stored: T.StructType, m: Manifest, n_salt: int
     ) -> _MergePlan:
@@ -726,49 +752,35 @@ class LakeTable:
         schema_version: int,
         tier: str,
         m: Manifest,
-        n_salt: int = 4,
-        pre_clustered: bool = False,
         sort_by: list[str] | None = None,
         drop_after_sort: list[str] | None = None,
         batch_stats=None,
     ) -> tuple[dict[str, list], dict[str, int]]:
         """Write rows (must carry _bucket) as per-bucket parquet under
-        snap_rel, then collect per-file stats (row count, order-column
-        min/max) with ONE distributed job that scans only that column
-        of the just-written files — executors do the footer/column
-        work, the driver receives O(#files) rows. No driver-side
-        directory listing or local footer parsing, so any
-        Hadoop-compatible root (s3a://, gs://) works.
+        snap_rel. Two layouts: pre-clustered (``df`` comes out of the
+        colocated LWW window's (bucket, salt) exchange, sorted by
+        bucket and key, and is written as is), or range-partitioned on
+        (_bucket, ``sort_by``) for layout rewrites.
 
-        ``batch_stats``: zero-extra-job stats for pre-clustered writes —
-        a callable (evaluated after the write job, so it may read an
-        Observation that rode it) returning the write's metrics: the
-        written row count ``rows`` (which alone decides whether the
-        write was empty), per-bucket row counts (delta appends) plus
-        batch-level order/stats-column bounds. Per-file bounds degrade
-        to the batch's — sound (conservative) for pruning, and free of
-        information in the windowed-ingest case, where one batch IS one
-        LSN window so
-        every file of the batch spans the same range anyway. Exact
-        per-file bounds only pay off for compaction-sorted BASE
-        files, which keep the distributed stats scan.
-
-        When not pre-clustered, repartition by (bucket, salt) — a hot
-        key spreads over n_salt tasks while partitionBy keeps layout
-        per-bucket — and sort with a leading _bucket so the
-        dynamic-partition writer doesn't inject its own sort (key order
-        in-file gives parquet min/max row-group skipping)."""
+        ``batch_stats``: a callable evaluated after the write job (so it
+        may read an Observation that rode it) returning the write's
+        ``_write_aggs`` metrics; ``rows`` alone decides whether the
+        write was empty. Per-file bounds degrade to the write's — sound
+        (conservative) for pruning, and exact for a windowed merge,
+        where one batch IS one LSN window. Without it (COW and layout
+        rewrites), ONE distributed job scans the order and stats
+        columns of the just-written files for exact per-file stats; no
+        driver-side footer reads, so any Hadoop-compatible root
+        (s3a://, gs://) works."""
         snap_dir = os.path.join(self.store.root, snap_rel)
-        keys = m.key_columns
-        if pre_clustered:
-            out = df  # already exchanged+sorted by (_bucket, _salt, keys)
-        elif sort_by:
-            # layout-optimizing rewrite (compaction): RANGE-partition on
-            # the sort key so each file owns a DISJOINT key range —
-            # that's what makes file-level min/max stats actually prune
-            # (hash-salted partitions would each span the full range).
-            # Explicit partition count: an AQE-coalesced single output
-            # file would leave nothing to prune.
+        out = df
+        if sort_by:
+            # RANGE-partition on the sort key so each file owns a
+            # DISJOINT key range — that's what makes file-level min/max
+            # stats actually prune (hash-salted partitions would each
+            # span the full range). Explicit partition count: an
+            # AQE-coalesced single output file would leave nothing to
+            # prune.
             n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             out = df.repartitionByRange(
                 n_parts, F.col("_bucket"), *[F.col(c) for c in sort_by]
@@ -778,13 +790,6 @@ class LakeTable:
                 # rows but are not table columns — project them away
                 # AFTER the sort (a projection keeps partition order)
                 out = out.drop(*drop_after_sort)
-        else:
-            out = (
-                df.withColumn("_salt", salt_expr(n_salt, *keys))
-                .repartition(F.col("_bucket"), F.col("_salt"))
-                .drop("_salt")
-                .sortWithinPartitions("_bucket", *keys)
-            )
         out.write.partitionBy("_bucket").parquet(snap_dir, mode="errorifexists")
 
         met = {}
@@ -814,9 +819,8 @@ class LakeTable:
         # file (one batch), so skipping is effective; key-column ranges
         # would not be (keys are hash-sprayed across files by design).
         oc = m.order_columns[-1]
-        stored = df.drop(*drop_after_sort).schema if drop_after_sort else df.schema
         try:
-            back = self.spark.read.schema(stored).parquet(snap_dir)
+            back = self.spark.read.schema(out.schema).parquet(snap_dir)
         except AnalysisException:
             # ONLY a genuinely absent path (a write whose every row was
             # filtered never creates the directory) maps to "no files
@@ -871,13 +875,14 @@ class LakeTable:
     def _list_snapshot_files(
         self, snap_rel: str, schema_version: int, tier: str, m: Manifest, met: dict
     ) -> tuple[dict[str, list], dict[str, int]]:
-        """Manifest entries for a just-written DELTA snapshot from the
-        write job's own observation plus an O(batch-files) listing of
-        the (writer-private, uuid-named) snapshot directory — replaces
-        the per-batch distributed read-back job on the MOR hot path
-        (measured ~0.25 s of a 1.5 s 1M-event merge). Every file entry
-        carries the BATCH's order/stats bounds; per-bucket row counts
-        come from the observation's conditional sums."""
+        """Manifest entries for a just-written pre-clustered snapshot
+        from the write job's own observation plus an O(batch-files)
+        listing of the (writer-private, uuid-named) snapshot directory
+        — replaces the distributed read-back job on the MOR hot path
+        (measured ~0.25 s of a 1.5 s 1M-event merge) and in fold
+        rewrites. Every file entry carries the write's order/stats
+        bounds; per-bucket row counts come from the observation's
+        conditional sums."""
         fs = self.store.fs
         snap_dir = os.path.join(self.store.root, snap_rel)
         oc = m.order_columns[-1]
@@ -908,38 +913,57 @@ class LakeTable:
                 rows[b] = int(met.get(f"_rows_{b}", 0) or 0)
         return files, rows
 
+    def _fold(
+        self, raw: DataFrame, m: Manifest, snap_rel: str, schema_version: int,
+        keep: Column | None = None,
+    ) -> tuple[dict[str, list], dict[str, int]]:
+        """Rewrite ``raw`` stored rows (every version, tombstones
+        included) as LWW-resolved BASE files under ``m``'s key→bucket
+        function: the MOR merge's dataflow — one (bucket, salt)
+        exchange whose sort resolves LWW and clusters the write, and an
+        Observation for the manifest stats. ``keep`` (tombstone GC)
+        filters AFTER the window, so a tombstone still shadows older
+        versions before it goes. The tiebreak hashes the stored columns
+        in read()'s order, so the fold keeps the version read() shows."""
+        names = raw.columns
+        df = dedup_last_writer_colocated(
+            raw.select(
+                "*",
+                bucket_expr(m.effective_bucket_columns, m.n_buckets).alias("_bucket"),
+                salt_expr(N_SALT, *m.key_columns).alias("_salt"),
+            ),
+            m.key_columns, m.order_columns, PART_COLS, names,
+        )
+        if keep is not None:
+            df = df.filter(keep)
+        obs = Observation()
+        return self._write_snapshot(
+            df.observe(obs, *_write_aggs(m, names)).select(*names, "_bucket"),
+            snap_rel, schema_version, BASE, m, batch_stats=lambda: obs.get,
+        )
+
     # ----------------------------------------------------------- utilities
     def overwrite_full(self, df: DataFrame, batch_id: str) -> CommitRecord | None:
         """Full refresh: replace all table content in one snapshot flip
         (ref: truncate-then-load, postgres/postgres.py:421-448; Carto
-        replace-and-swap rename in one txn, carto_.py:422-436)."""
+        replace-and-swap rename in one txn, carto_.py:422-436). The
+        rows fold like a compaction (see _fold): duplicate keys resolve
+        LWW in the write's own exchange."""
         m = self.manifest
         if batch_id in m.applied_batch_ids:
             return None
-        keys = m.key_columns
         oc = m.order_columns[-1]
-        current = self.schema(m)
-        new_schema = evolve_schema(current, df.schema)
-        schema_added: list[SchemaVersion] = []
-        if new_schema.json() != current.json():
-            schema_added = [
-                SchemaVersion(len(m.schema_versions), new_schema.json(), MetaStore.now())
-            ]
-            current = new_schema
-        current_version = (m.schema_versions + schema_added)[-1].version
-        stored_schema = _with_deleted(current)
-
+        current, schema_added, current_version = self._evolve(m, df.schema)
         obs = Observation()
-        staged = df.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            F.min(oc).alias("lsn_lo"), F.max(oc).alias("lsn_hi"),
+        staged = coerce_to(
+            df.observe(
+                obs, F.count(F.lit(1)).alias("n"),
+                F.min(oc).alias("lsn_lo"), F.max(oc).alias("lsn_hi"),
+            ).withColumn(DELETED_COL, F.lit(False)),
+            _with_deleted(current),
         )
-        staged = dedup_last_writer(
-            coerce_to(staged.withColumn(DELETED_COL, F.lit(False)), stored_schema),
-            keys, m.order_columns,
-        ).withColumn("_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets))
         snap_rel = f"data/refresh-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
-        new_files, bucket_rows = self._write_snapshot(staged, snap_rel, current_version, BASE, m)
+        new_files, bucket_rows = self._fold(staged, m, snap_rel, current_version)
         met = obs.get
         lsn_lo = _as_lsn(met["lsn_lo"])
         lsn_hi = _as_lsn(met["lsn_hi"])
@@ -1060,12 +1084,11 @@ class LakeTable:
             )
         if n_buckets == m.n_buckets and new_bcols == m.effective_bucket_columns:
             return
-        df = self.read(include_deleted=True, manifest=m).withColumn(
-            "_bucket", bucket_expr(new_bcols, n_buckets)
-        )
         snap_rel = f"data/rebucket-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
-        new_files, _ = self._write_snapshot(
-            df, snap_rel, m.schema_versions[-1].version, BASE, m
+        new_files, _ = self._fold(
+            self.read(include_deleted=True, manifest=m, resolve=False),
+            dataclasses.replace(m, n_buckets=n_buckets, bucket_columns=new_bcols),
+            snap_rel, m.schema_versions[-1].version,
         )
         replaces = {b: [] for b in m.bucket_files}
         replaces.update(new_files)
@@ -1395,29 +1418,7 @@ class LakeTable:
                 return
             oc = m.order_columns[-1]
             gc_horizon = -1  # max lsn whose tombstones may be purged
-            if plain_fold:
-                # single-exchange fold (same dataflow as the MOR merge
-                # hot path): raw base∪delta rows exchange ONCE by
-                # (bucket, salt), the colocated window resolves LWW in
-                # the same sort the bucket-partitioned writer needs,
-                # and an observation riding the write supplies the
-                # manifest stats — no resolve shuffle, no repartition,
-                # no read-back stats job. Layout rewrites (sort_by /
-                # zorder_by) keep the range-partitioned path below,
-                # where exact per-file stats are the point. The
-                # tiebreak hashes the stored columns in read()'s order,
-                # so the fold keeps the version read() shows.
-                raw = self.read(
-                    buckets=targets, include_deleted=True, manifest=m, resolve=False,
-                )
-                df = dedup_last_writer_colocated(
-                    raw.withColumn(
-                        "_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets)
-                    ).withColumn("_salt", salt_expr(4, *m.key_columns)),
-                    m.key_columns, m.order_columns, PART_COLS, raw.columns,
-                )
-            else:
-                df = self.read(buckets=targets, include_deleted=True, manifest=m)
+            keep = None
             if gc_tombstones:
                 if gc_tombstones_below_lsn is None:
                     gc_horizon = max([-1] + [int(w) for w in m.watermarks.values()])
@@ -1445,40 +1446,37 @@ class LakeTable:
                         f"{lagging}; compact without gc_tombstones, raise "
                         f"gc_tombstones_below_lsn, or pass force=True."
                     )
-                df = df.filter(keep)
-            if not plain_fold:
+            snap_rel = f"data/compact-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
+            current_version = m.schema_versions[-1].version
+            if plain_fold:
+                new_files, _ = self._fold(
+                    self.read(buckets=targets, include_deleted=True, manifest=m, resolve=False),
+                    m, snap_rel, current_version, keep,
+                )
+            else:
+                # layout rewrite: range-partitioned on the sort key, for
+                # the exact per-file stats that pruning feeds on
+                df = self.read(buckets=targets, include_deleted=True, manifest=m)
+                if keep is not None:
+                    df = df.filter(keep)
                 df = df.withColumn(
                     "_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets)
                 )
-            snap_rel = f"data/compact-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
-            current_version = m.schema_versions[-1].version
-            drop_after = None
-            if zorder_by:
-                from ..operators.layout import with_zorder
+                drop_after = None
+                if zorder_by:
+                    from ..operators.layout import with_zorder
 
-                df = with_zorder(df, zorder_by)
-                sort_by, drop_after = ["_zorder"], ["_zorder"]
-            if plain_fold:
-                obs = Observation()
-                scols = [c for c in m.stats_columns if c in df.columns and c != oc]
-                df = df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.min(F.col(oc)).alias("f_lo"),
-                    F.max(F.col(oc)).alias("f_hi"),
-                    *[x for c in scols for x in (
-                        F.min(F.col(c)).alias(f"_lo_{c}"),
-                        F.max(F.col(c)).alias(f"_hi_{c}"),
-                    )],
-                )
-                new_files, _ = self._write_snapshot(
-                    df.drop("_salt"), snap_rel, current_version, BASE, m,
-                    pre_clustered=True, batch_stats=lambda: obs.get,
-                )
-            else:
+                    df = with_zorder(df, zorder_by)
+                    sort_by, drop_after = ["_zorder"], ["_zorder"]
                 new_files, _ = self._write_snapshot(
                     df, snap_rel, current_version, BASE, m,
                     sort_by=sort_by, drop_after_sort=drop_after,
+                )
+            stray = set(new_files) - {str(b) for b in targets}
+            if stray:  # committing only the targets would drop these rows
+                raise ValueError(
+                    f"compaction of buckets {targets} rewrote rows into buckets "
+                    f"{sorted(stray, key=int)}; nothing was committed"
                 )
             delta = LogDelta(
                 version=m.version + 1,

@@ -71,30 +71,22 @@ def payload_tiebreak(df: DataFrame | list[str]) -> Column:
     return F.xxhash64(*[F.col(c) for c in cols])
 
 
-def lww_rank(keys: list[str], order_cols: list[str], tiebreak: Column | None = None) -> Column:
-    """row_number() over keys, newest-writer-first on order_cols, then
-    ``tiebreak`` (pass payload_tiebreak(df) for a total order) — rank 1
-    is the surviving row."""
-    order = [F.col(c).desc_nulls_last() for c in order_cols]
-    if tiebreak is not None:
-        order.append(tiebreak.desc())
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return F.row_number().over(w)
-
-
 def dedup_last_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
     """Keep exactly one row per key: the last writer by order_cols,
     ties broken by payload hash (total order → deterministic replay).
+    The keyed LWW form, for reads and queries: ``row_number() == 1``
+    over a key-partitioned window, which Spark plans with a partial
+    ``WindowGroupLimit`` BEFORE the exchange. Lake writes use the
+    colocated form below instead, whose exchange is the write's.
 
     Reference semantics: AGO dup-PK repair (ago/ago.py:1070-1078) and
     the "doubled up" retry reconciliation (ago/ago.py:786-822), done
     set-wise in one shuffle.
     """
-    return (
-        df.withColumn("_rn", lww_rank(keys, order_cols, payload_tiebreak(df)))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    w = Window.partitionBy(*keys).orderBy(
+        *[F.col(c).desc_nulls_last() for c in order_cols], payload_tiebreak(df).desc()
     )
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def colocated_lww(
@@ -141,42 +133,6 @@ def dedup_last_writer_colocated(
     """
     prev, first = colocated_lww(keys, order_cols, part_cols, tiebreak_cols)
     return df.select("*", *prev).filter(first).drop(*[f"_prev_{k}" for k in keys])
-
-
-def merge_lww(
-    target: DataFrame,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """Merge a change batch into target rows; both sides carry
-    ``_deleted`` and the order columns. Returns the merged rows
-    (tombstones included — caller filters/GCs).
-
-    union + keep-last-writer is correct for every case the reference
-    handles plus the ones it can't:
-    - plain upsert: newer batch row wins over target row
-    - out-of-order update: older-ts batch row LOSES to existing row
-    - delete-then-late-update: tombstone retains (ts, lsn) so a late
-      lower-ts update still loses (impossible to get right without
-      tombstones; the reference's DELETE is destructive and silently
-      resurrects — we keep the stronger semantics)
-    - replayed duplicate events: identical key+order rows collapse to 1
-    """
-    cols = target.columns
-    return dedup_last_writer(
-        target.select(*cols).unionByName(batch.select(*cols)), keys, order_cols
-    )
-
-
-def upsert_only(
-    target: DataFrame, batch: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Blind upsert (batch always wins) — the exact ON CONFLICT DO
-    UPDATE semantics of postgres/postgres.py:551-565 where staging
-    unconditionally overwrites. anti-join + union: one shuffle, batch
-    side broadcast when small (AQE decides)."""
-    return target.join(batch, on=keys, how="left_anti").unionByName(batch)
 
 
 def delete_stale(

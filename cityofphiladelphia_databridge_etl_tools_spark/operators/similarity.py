@@ -15,6 +15,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_bytes
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -183,8 +185,7 @@ def _spread(df: DataFrame, key_col: str) -> DataFrame:
     conversion per call, swamping what it saves)."""
     spark = df.sparkSession
     width = spark.sparkContext.defaultParallelism
-    max_bytes = int(spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)).rstrip("b"))
+    max_bytes = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     if size >= width * max_bytes:
         return df

@@ -244,8 +244,3 @@ def parse_source_datetime(
     for c in columns:
         out = out.withColumn(c, F.try_to_timestamp(F.col(c), F.lit(fmt)))
     return out
-
-
-def empty_clone(df: DataFrame) -> DataFrame:
-    """T15 (ref: WHERE 1=0 temp-table clones, postgres.py:370-377)."""
-    return df.limit(0)

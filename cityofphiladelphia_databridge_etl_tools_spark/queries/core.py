@@ -237,17 +237,6 @@ def cdc_delete_stale(spark, sf_dir):
     )
 
 
-def cdc_watermark(spark, sf_dir):
-    """Per-partition watermark computation — U7/A2 (db2.py:596-655,
-    ago.py:1317-1329 MAX(updated_datetime))."""
-    ev = _events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.max("ts").alias("max_ts"),
-        F.max("event_id").alias("max_lsn"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def cdc_except_diff(spark, sf_dir):
     """recorddiff oracle — A5 (tests/test_postgres.py:69-86): project
     two halves of the stream and diff them with EXCEPT ALL."""
@@ -297,18 +286,6 @@ def t_scrub_sanitize(spark, sf_dir):
         F.length(clean).alias("clean_len"),
         "remote_text",
         F.length("remote_text").alias("remote_len"),
-    )
-
-
-def t_tz_shift(spark, sf_dir):
-    """Timezone localize — T4 (postgres.py:327-341 US/Eastern): shift
-    event time by a fixed offset and histogram local hours."""
-    ev = _events(spark, sf_dir)
-    local = F.col("ts") + F.expr("INTERVAL 5 HOURS")
-    return (
-        ev.select(F.hour(local).alias("local_hour"))
-        .groupBy("local_hour")
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -396,15 +373,6 @@ def t_geometry_promote(spark, sf_dir):
     return out.select("doc_id", "srid", "shape", "lat", "lng")
 
 
-def t_point_latlng(spark, sf_dir):
-    """T8 (ref: opendata.py:186-244): EWKT POINT → lat/lng doubles,
-    EMPTY/non-point → nulls, geometry column dropped."""
-    from ..operators import transforms as TR
-
-    g = _synthetic_geoms(spark, sf_dir)
-    return TR.point_to_lat_lng(g).select("doc_id", "lat", "lng")
-
-
 def t_reproject(spark, sf_dir):
     """T6 (ref: ago/ago.py:351-427 pyproj 2272→4326, opendata.py:186-244
     project-then-latlng): closed-form Lambert-conformal-conic inverse
@@ -429,19 +397,6 @@ def t_esri_json(spark, sf_dir):
     g = _synthetic_geoms(spark, sf_dir)
     out = TR.to_esri_json(TR.remap_bad_srid(TR.extract_srid(g)), srid_col="srid")
     return out.select("doc_id", "esri_json")
-
-
-def t_clean_remote(spark, sf_dir):
-    """T5 (ref: ago/ago.py:436-474): strip non-ascii and '\"<>
-    characters before remote upload, empty→null — exercised on text
-    deliberately salted with both classes."""
-    from ..operators.transforms import clean_for_remote
-
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.col("text"), F.lit(' <"é"> ')).alias("text")
-    )
-    out = clean_for_remote(d, ["text"])
-    return out.select("doc_id", "text", F.length("text").alias("clean_len"))
 
 
 def t_batch_enrich(spark, sf_dir):

@@ -138,13 +138,6 @@ def ann_cosine_topk(spark, sf_dir):
     return S.brute_force_topk(emb, queries, k=5)
 
 
-def ann_lsh_bucket_hist(spark, sf_dir):
-    """Hyperplane-LSH bucket assignment (the ANN scale path): bucket
-    histogram proves the partitioning the bucket-join relies on."""
-    b = S.lsh_buckets(_emb(spark, sf_dir), n_planes=8)
-    return b.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_vecs"))
-
-
 def ann_lsh_topk(spark, sf_dir):
     """LSH-bucketed ANN top-k (recall<1 tradeoff vs ann_cosine_topk)."""
     emb = _emb(spark, sf_dir)

@@ -12,6 +12,7 @@ a session-wide setting, so the session TZ can stay deterministic.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +63,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size conf of the session as bytes, ``default`` when unset.
+    Accepts what Spark accepts: plain bytes or a binary-unit suffix
+    (``134217728``, ``134217728b``, ``128m``, ``64MB``, ``1g``)."""
+    raw = spark.conf.get(key, None)
+    if raw is None:
+        return default
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
+    if m is None:
+        raise ValueError(f"{key}={raw!r} is not a byte size")
+    return int(m[1]) << 10 * ("", "k", "m", "g", "t", "p").index(m[2])
 
 
 def stop_spark() -> None:

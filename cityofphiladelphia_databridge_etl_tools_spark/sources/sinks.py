@@ -50,27 +50,6 @@ def write_jdbc(
     writer.save()
 
 
-def foreach_partition_batched(df: DataFrame, send, batch_size: int = 500) -> None:
-    """K6 (ref: ago.py:477-713 per-row loop with 500-row flushes): the
-    set-wise version — each partition iterates Rows, flushing
-    ``send(list_of_rows)`` every batch_size. Network work distributes
-    across executors instead of one Python loop. Fire-and-forget; for
-    retries, idempotency tokens, dead-lettering and count
-    reconciliation use :func:`deliver_batched_reliable`."""
-
-    def run(it):
-        buf = []
-        for row in it:
-            buf.append(row)
-            if len(buf) >= batch_size:
-                send(buf)
-                buf = []
-        if buf:
-            send(buf)
-
-    df.foreachPartition(run)
-
-
 def deliver_batched_reliable(
     df: DataFrame,
     send,

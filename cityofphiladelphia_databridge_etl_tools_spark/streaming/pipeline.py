@@ -27,6 +27,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_bytes
+
 
 def _stream_state_partitions(spark: SparkSession, df: DataFrame) -> int:
     """Scale-adaptive state-store partition count for a bounded-source
@@ -47,8 +49,7 @@ def _stream_state_partitions(spark: SparkSession, df: DataFrame) -> int:
     if override:
         return max(1, int(override))
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    max_bytes = int(spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)).rstrip("b"))
+    max_bytes = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     floor = max(1, spark.sparkContext.defaultParallelism // 4)
     return max(1, min(session_parts, max(floor, -(-size // max_bytes))))

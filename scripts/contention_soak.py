@@ -91,11 +91,9 @@ def main():
     n_writers = 2
     n_total = n_writers * n_batches * batch
 
-    import pyspark.sql.functions as F
-
+    from cityofphiladelphia_databridge_etl_tools_spark import changegen
     from cityofphiladelphia_databridge_etl_tools_spark.changegen import TRANSCRIPT_SCHEMA
     from cityofphiladelphia_databridge_etl_tools_spark.lake import LakeTable
-    from cityofphiladelphia_databridge_etl_tools_spark.operators.merge import dedup_last_writer
     from cityofphiladelphia_databridge_etl_tools_spark.session import get_spark
 
     spark = get_spark("contention-parent", cores=32,
@@ -149,8 +147,7 @@ def main():
 
     # ---- final state vs the one-shot replay oracle over ALL events
     full = _gen(spark, 0, n_total, n_total)
-    expect = dedup_last_writer(full, ["conv_id", "turn_idx"], ["ts", "lsn"]).filter(
-        F.col("op") != "D").drop("op")
+    expect = changegen.expected_final_state(full)
     got = t.read().select(*expect.columns)
     diff = got.exceptAll(expect).count() + expect.exceptAll(got).count()
     print(f"final state rows={got.count():,} diff-vs-oracle={diff}")

@@ -28,7 +28,6 @@ import pyspark.sql.functions as F
 from cityofphiladelphia_databridge_etl_tools_spark import changegen
 from cityofphiladelphia_databridge_etl_tools_spark.changegen import TRANSCRIPT_SCHEMA
 from cityofphiladelphia_databridge_etl_tools_spark.lake import CompactionScheduler, LakeTable
-from cityofphiladelphia_databridge_etl_tools_spark.operators.merge import dedup_last_writer
 from cityofphiladelphia_databridge_etl_tools_spark.session import get_spark
 from cityofphiladelphia_databridge_etl_tools_spark.streaming.runner import LsnWindowRunner
 
@@ -117,8 +116,7 @@ def main():
     # final-state equality against the one-shot replay oracle
     full = changegen.changes(spark, n, seed=42, n_convs=n // 10, max_turns=50,
                              hot_frac=0.2, n_hot=3)
-    expect = dedup_last_writer(full, ["conv_id", "turn_idx"], ["ts", "lsn"]).filter(
-        F.col("op") != "D").drop("op")
+    expect = changegen.expected_final_state(full)
     got = t.read().select(*expect.columns)
     diff = got.exceptAll(expect).count() + expect.exceptAll(got).count()
     print(f"final state rows={got.count():,} diff-vs-oracle={diff}")

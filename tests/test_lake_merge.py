@@ -999,3 +999,73 @@ def test_merge_plan_follows_table_shape(spark, tmp_path):
     got = t.read()
     assert dict(got.dtypes)["turn_idx"] == "int"
     assert_df_equal(got, changegen.expected_final_state(applied))
+
+
+def _int_keyed_table(spark, tmp_path):
+    """An 8-bucket table keyed (and bucketed) on ``int k``, holding 200
+    inserted keys."""
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("v", T.StringType(), True),
+        T.StructField("lsn", T.LongType(), False),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, key_columns=["k"],
+                         order_columns=["lsn"], n_buckets=8)
+    rows = [(i, f"a{i}", i, "I") for i in range(200)]
+    t.merge_batch(spark.createDataFrame(rows, "k int, v string, lsn long, op string"), "b0")
+    return t
+
+
+def _long_key_updates(spark):
+    rows = [(i, f"b{i}", 1000 + i, "U") for i in range(200)]
+    return spark.createDataFrame(rows, "k long, v string, lsn long, op string")
+
+
+def test_widening_a_bucket_column_is_refused(spark, tmp_path):
+    """xxhash64 hashes an int and a long of equal value differently, so
+    widening a bucket column would put new versions of a key in
+    another bucket than its stored ones. merge_batch and overwrite_full
+    refuse it before writing any file; table state and files stay as
+    they were."""
+    import os
+
+    t = _int_keyed_table(spark, tmp_path)
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(t.store.data_dir) for f in fs)
+
+    before, m_before, files_before = t.read(), t.manifest.to_json(), files()
+    wide = _long_key_updates(spark)
+    with pytest.raises(ValueError, match="bucket column"):
+        t.merge_batch(wide, "b1")
+    with pytest.raises(ValueError, match="bucket column"):
+        t.overwrite_full(wide.drop("op"), "r1")
+    assert t.manifest.to_json() == m_before
+    assert files() == files_before
+    assert_df_equal(t.read(), before)
+
+
+def test_compaction_refuses_rows_outside_its_buckets(spark, tmp_path):
+    """A table whose bucket column was widened before that was refused
+    stores versions of a key in two buckets. A partial compaction
+    rewrites some of them into buckets it does not replace; committing
+    only its targets would drop those rows, so it commits nothing."""
+    from cityofphiladelphia_databridge_etl_tools_spark.lake.manifest import (
+        LogDelta, MetaStore, SchemaVersion,
+    )
+
+    t = _int_keyed_table(spark, tmp_path)
+    m = t.manifest
+    widened = T.StructType([
+        T.StructField(f.name, T.LongType() if f.name == "k" else f.dataType, f.nullable)
+        for f in t.schema(m).fields
+    ])
+    t.store.commit_delta(m, LogDelta(
+        version=m.version + 1,
+        schema_versions_added=[SchemaVersion(1, widened.json(), MetaStore.now())],
+    ))
+    t.merge_batch(_long_key_updates(spark), "b1")
+    m_before = t.manifest.to_json()
+    with pytest.raises(ValueError, match="nothing was committed"):
+        t.compact(buckets=[0, 1, 2, 3])
+    assert t.manifest.to_json() == m_before

@@ -500,3 +500,32 @@ def test_jaccard_ubiquitous_shingle_cap_defaults_on(spark):
         for r in D.jaccard_pairs(sh, max_doc_freq=5, pairs=cand).collect()
     }
     assert verify == {(1, 2): 0.6}
+
+
+def test_byte_size_confs_accept_unit_suffixes(spark):
+    """maxPartitionBytes set the way Spark users write it ("128m")
+    sizes the similarity spread and the streaming state partitions
+    like its byte count does."""
+    from cityofphiladelphia_databridge_etl_tools_spark.operators.similarity import _spread
+    from cityofphiladelphia_databridge_etl_tools_spark.streaming.pipeline import (
+        _stream_state_partitions,
+    )
+
+    key = "spark.sql.files.maxPartitionBytes"
+    df = spark.range(100).withColumn("k", F.col("id") % 7)
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(128 * 1024 * 1024))
+        want = _stream_state_partitions(spark, df)
+        spark.conf.set(key, "128m")
+        assert _stream_state_partitions(spark, df) == want
+        assert "Exchange" in _spread(df, "k")._jdf.queryExecution().executedPlan().toString()
+
+        from cityofphiladelphia_databridge_etl_tools_spark.session import conf_bytes
+
+        for raw, n in (("128m", 128 << 20), ("64MB", 64 << 20), ("1g", 1 << 30),
+                       ("134217728b", 128 << 20)):
+            spark.conf.set(key, raw)
+            assert conf_bytes(spark, key, 0) == n
+    finally:
+        spark.conf.set(key, prev)

@@ -171,3 +171,54 @@ def test_doc_shingles_splits_text_exactly_once(spark):
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
     plan = D.doc_shingles(docs)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(") == 1, plan
+
+
+def test_keyed_lww_keeps_window_group_limit(spark):
+    """The keyed LWW form (reads, cdc_upsert_state) is row_number() == 1,
+    which Spark plans with a partial WindowGroupLimit before the
+    exchange — lost if reads ever share the colocated lag form of the
+    lake writes."""
+    from cityofphiladelphia_databridge_etl_tools_spark.operators.merge import dedup_last_writer
+
+    q = dedup_last_writer(
+        changegen.changes(spark, 200, seed=35), ["conv_id", "turn_idx"], ["ts", "lsn"]
+    )
+    q.collect()
+    assert "WindowGroupLimit" in q._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rewrites_cost_no_more_jobs_than_a_fold(spark, tmp_path):
+    """Full refresh and rebucket run the plain-fold compaction's
+    dataflow — one (bucket, salt) exchange resolving LWW, observed
+    stats, a pre-clustered write — so neither launches more Spark jobs
+    than compact() on the same table."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+        ["conv_id", "turn_idx"], ["ts", "lsn"], n_buckets=4,
+    )
+    full = changegen.changes(spark, 400, seed=36)
+    t.merge_batch(full.filter(F.col("lsn") < 200), "b0")
+    t.merge_batch(full.filter(F.col("lsn") >= 200), "b1")
+    n_fold = _jobs(spark, t.compact)
+    assert 1 <= n_fold <= 2, n_fold  # one exchange: its map stage, then the write
+    # base-only now, so read() is a plain scan with no exchange of its own
+    n_refresh = _jobs(spark, lambda: t.overwrite_full(t.read(), "refresh"))
+    n_rebucket = _jobs(spark, lambda: t.rebucket(8))
+    assert n_refresh <= n_fold and n_rebucket <= n_fold, (n_fold, n_refresh, n_rebucket)
+    from tests.test_lake_merge import assert_df_equal
+    assert_df_equal(t.read(), changegen.expected_final_state(full))
