@@ -95,7 +95,6 @@ def run_ingest(
     spark,
     n_events: int,
     n_batches: int = 4,
-    mode: str = "mor",
     warmup: bool = True,
     text_chars: int = 0,
     reps: int = 1,
@@ -137,7 +136,7 @@ def run_ingest(
         if not os.path.exists(f"{wp}/_SUCCESS"):  # see stage_batches
             shutil.rmtree(wp, ignore_errors=True)
             slice_(0, n_events // 10).write.parquet(wp)
-        w.merge_batch(spark.read.parquet(wp), "warm", mode=mode)
+        w.merge_batch(spark.read.parquet(wp), "warm")
 
     # timed section, repeated: this host's effective capacity swings
     # minute to minute (throttle phases), so a single run is noise —
@@ -152,9 +151,7 @@ def run_ingest(
             bucket_columns=["conv_id"],  # r1/r2-identical layout for comparability
         )
         def apply(k):
-            t.merge_batch(
-                spark.read.parquet(batch_paths[k]), f"bench-{k}", n_salt=4, mode=mode
-            )
+            t.merge_batch(spark.read.parquet(batch_paths[k]), f"bench-{k}", n_salt=4)
 
         t0 = time.time()
         if pipeline_depth > 1:
@@ -183,7 +180,7 @@ def run_ingest(
     return {
         "n_events": n_events,
         "n_batches": n_batches,
-        "mode": mode,
+        "mode": "mor",  # the one merge strategy; kept for history.jsonl
         "ingest_sec": round(ingest_s, 2),
         "rep_secs": [round(s, 2) for s in rep_secs],
         "events_per_sec": round(n_events / ingest_s, 1),

@@ -5,7 +5,7 @@ streaming tail, maintenance, and inspection, all runnable under plain
 
     create  --root R --keys conv_id,turn_idx [--order-cols ts,lsn] [--n-buckets 16]
             --schema 'conv_id string, turn_idx int, ...'
-    ingest  --root R --changes PATH.parquet [--batch-id ID] [--mode mor|cow]
+    ingest  --root R --changes PATH.parquet [--batch-id ID]
     run     --root R --generate N [--events-per-batch M]      (windowed demo feed)
     stream  --root R --changes-dir DIR --checkpoint DIR
     compact --root R [--buckets 1,2,3]
@@ -56,7 +56,6 @@ def main(argv: list[str] | None = None) -> int:
     i.add_argument("--root", required=True)
     i.add_argument("--changes", required=True)
     i.add_argument("--batch-id", default=None)
-    i.add_argument("--mode", default="mor", choices=["mor", "cow"])
     i.add_argument("--on-bad-rows", default="fail", choices=["fail", "dead_letter"])
 
     r = sub.add_parser("run", help="windowed ingest of a generated demo stream")
@@ -65,7 +64,7 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--events-per-batch", type=int, default=1_000_000)
     r.add_argument("--seed", type=int, default=42)
     r.add_argument("--pipeline-depth", type=int, default=1,
-                   help="merge N windows concurrently (MOR only; ~2x at 32 cores)")
+                   help="merge N windows concurrently (~2x at 32 cores)")
     r.add_argument("--offpath-compaction", action="store_true",
                    help="disable inline folding; a background "
                         "CompactionScheduler maintains the table "
@@ -106,7 +105,9 @@ def main(argv: list[str] | None = None) -> int:
 
     rb = sub.add_parser("rebucket", help="rewrite the table under a new bucket count")
     rb.add_argument("--root", required=True)
-    rb.add_argument("--n-buckets", type=int, required=True)
+    rb.add_argument("--n-buckets", type=int, required=True,
+                    help="the current count also rewrites the table, re-hashing "
+                         "every row (the repair for rows outside their bucket)")
 
     u = sub.add_parser("cursor", help="register a change-feed consumer's progress")
     u.add_argument("--root", required=True)
@@ -141,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
         import hashlib
 
         bid = args.batch_id or f"cli-{hashlib.md5(args.changes.encode()).hexdigest()[:12]}"
-        rec = t.merge_batch(changes, bid, mode=args.mode, on_bad_rows=args.on_bad_rows)
+        rec = t.merge_batch(changes, bid, on_bad_rows=args.on_bad_rows)
         if rec is None:
             print(f"batch {bid} already committed — no-op")
         else:

@@ -29,7 +29,7 @@ import logging
 import threading
 
 from .manifest import ConcurrentCommitError
-from .table import DELTA, LakeTable
+from .table import LakeTable, delta_heavy_buckets
 
 _log = logging.getLogger(__name__)
 
@@ -105,28 +105,10 @@ class CompactionScheduler:
                 pass
 
     # ----------------------------------------------------------------- work
-    def _over_threshold(self) -> list[int]:
-        m = self.table.manifest
-        over = sorted(
-            (
-                (sum(1 for e in entries if e[2] == DELTA), int(b))
-                for b, entries in m.bucket_files.items()
-            ),
-            reverse=True,
-        )
-        return [b for n_delta, b in over if n_delta > self.threshold]
-
     def _cycle(self, drain: bool = False) -> bool:
         """One maintenance cycle. Returns True when work was done."""
-        worst = self._over_threshold()
-        if drain:
-            # terminal drain folds EVERYTHING with any delta residue
-            m = self.table.manifest
-            worst = sorted(
-                int(b)
-                for b, entries in m.bucket_files.items()
-                if any(e[2] == DELTA for e in entries)
-            )
+        # terminal drain folds EVERYTHING with any delta residue
+        worst = delta_heavy_buckets(self.table.manifest, 0 if drain else self.threshold)
         if not worst:
             return False
         targets = worst if drain else worst[: self.max_buckets_per_cycle]

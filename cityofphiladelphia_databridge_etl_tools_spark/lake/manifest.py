@@ -243,7 +243,7 @@ class LogDelta:
     schema_versions_added: list[SchemaVersion] = field(default_factory=list)
     # MOR appends: bucket -> entries ADDED to that bucket's file list
     bucket_appends: dict[str, list[list]] = field(default_factory=dict)
-    # COW / compaction / overwrite: bucket -> full replacement list
+    # compaction / rebucket / overwrite: bucket -> full replacement list
     bucket_replaces: dict[str, list[list]] = field(default_factory=dict)
     # merged with max() into the per-bucket watermarks
     watermark_updates: dict[str, int] = field(default_factory=dict)

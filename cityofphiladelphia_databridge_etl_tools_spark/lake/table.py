@@ -2,29 +2,23 @@
 exactly-once batch ids, LWW merge, schema evolution, and tombstoned
 deletes.
 
-Two merge strategies (both Catalyst-planned, zero per-row Python):
-
-copy-on-write (mode="cow") — read touched buckets, union the batch,
-one LWW window, rewrite those buckets. Read-optimal; write cost is
-O(touched table data) per batch.
-
-merge-on-read (mode="mor") — LWW-dedup the batch alone (small window)
-and append it as *delta* files to the touched buckets; readers resolve
+One merge strategy (Catalyst-planned, zero per-row Python), merge-on-
+read as in Iceberg/Hudi: LWW-dedup the batch alone (small window) and
+append it as *delta* files to the touched buckets; readers resolve
 base ∪ deltas with the same LWW window; bucket-scoped compaction folds
 deltas back into base when a bucket accumulates too many. Write cost
-is O(batch) — this is what sustains 10^10-event ingest, and mirrors
-Iceberg/Hudi MOR. Correctness is identical because key→bucket is a
-pure function: every version of a key lands in one bucket, so the
-read-side window sees all of them.
+is O(batch) — this is what sustains 10^10-event ingest. Correctness
+holds because key→bucket is a pure function: every version of a key
+lands in one bucket, so the read-side window sees all of them.
+Read-heavy callers fold the touched buckets right after the merge
+(see ``LakeTable.merge_batch``).
 
 The merge dataflow:
 
     changes ──(evolve schema; one projection: coerce, _deleted, bad-row
                flag, _bucket, _salt; observe input; drop bad rows)──► staged
-    mor: staged ──(bucket, salt) exchange + LWW window──► observe output
+    staged ──(bucket, salt) exchange + LWW window──► observe output
                ──► append delta files (touched buckets = written dirs)
-    cow: staged ──distinct bucket ids──► touched    (bucket pruning)
-         read(touched) ∪ staged ──LWW window──► rewrite buckets
     rewrite: raw stored rows ──_bucket, _salt; (bucket, salt) exchange +
                LWW window──► observe output ──► base files  (plain-fold
                compact, rebucket, full refresh: LakeTable._fold)
@@ -37,9 +31,9 @@ residual shuffle skew. Metadata cost per commit is O(batch), not
 O(table) — see lake/manifest.py. Per-file stats (rows, order-column
 min/max) of merge deltas and of every fold rewrite come from an
 Observation riding the write job plus a listing of the writer-private
-snapshot directory. Only COW rewrites and layout rewrites (sort_by /
-zorder_by) get exact per-file stats from a distributed one-column scan
-of the just-written files, not driver-side footer reads, so any
+snapshot directory. Only layout rewrites (sort_by / zorder_by) get
+exact per-file stats from a distributed one-column scan of the
+just-written files, not driver-side footer reads, so any
 Hadoop-compatible root works.
 """
 
@@ -62,7 +56,6 @@ from ..operators.merge import (
     bucket_expr,
     colocated_lww,
     dedup_last_writer,
-    dedup_last_writer_colocated,
     salt_expr,
 )
 from .manifest import (
@@ -138,6 +131,22 @@ def _as_lsn(v) -> int:
         return int(v)
     except (TypeError, ValueError):
         return -1
+
+
+def delta_heavy_buckets(m: Manifest, threshold: int) -> list[int]:
+    """The buckets of ``m`` holding more than ``threshold`` delta
+    files, worst first: (delta count, bucket id) descending. The one
+    maintenance policy of inline auto-compaction and
+    CompactionScheduler; ``threshold=0`` lists every delta-bearing
+    bucket."""
+    over = sorted(
+        (
+            (sum(1 for e in entries if e[2] == DELTA), int(b))
+            for b, entries in m.bucket_files.items()
+        ),
+        reverse=True,
+    )
+    return [b for n_delta, b in over if n_delta > threshold]
 
 
 class _MergePlan:
@@ -408,7 +417,6 @@ class LakeTable:
         changes: DataFrame,
         batch_id: str,
         n_salt: int = N_SALT,
-        mode: str = "mor",
         compact_threshold: int = 16,
         max_auto_compact_buckets: int = 4,
         on_bad_rows: str = "fail",
@@ -433,12 +441,17 @@ class LakeTable:
         ``lsn-<lo>-<hi>`` ids are tracked structurally, unbounded) when
         the upstream can replay arbitrarily late, or size
         ``id_retention`` above its worst-case replay lag.
-        mode="mor" appends LWW-deduped delta
-        files (O(batch) write) and auto-compacts buckets whose delta
-        count exceeds ``compact_threshold`` — amortized to the
-        ``max_auto_compact_buckets`` worst per trigger so wide ingest
-        never stalls behind an O(table) inline rewrite; mode="cow"
-        rewrites the touched buckets fully.
+
+        The batch is appended as LWW-deduped delta files (O(batch)
+        write); buckets whose delta count exceeds ``compact_threshold``
+        then auto-compact — amortized to the ``max_auto_compact_buckets``
+        worst per trigger so wide ingest never stalls behind an
+        O(table) inline rewrite. Read-heavy callers that want every
+        touched bucket base-only after each batch fold them right away::
+
+            rec = t.merge_batch(changes, batch_id)
+            if rec is not None:
+                t.compact(buckets=rec.touched_buckets)
 
         Plan cache: the Column expressions of a window — the staging
         projection, the input and output observation aggregates, and
@@ -449,15 +462,13 @@ class LakeTable:
         any of them rebuilds the plan. A window then costs a few
         DataFrame calls and two new Observations.
 
-        Concurrency: on a lost commit race, MOR batches (whose file
-        appends and watermark bumps commute under LWW) are rebased onto
+        Concurrency: on a lost commit race, the batch (whose file
+        appends and watermark bumps commute under LWW) is rebased onto
         the winner's manifest and re-CAS'd automatically, up to
-        ``max_commit_retries``; COW batches and schema-evolving batches
-        raise ConcurrentCommitError — their content depends on the
-        parent snapshot, so the caller replays against fresh state.
+        ``max_commit_retries``; a schema-evolving batch raises
+        ConcurrentCommitError — its schema version was numbered against
+        the parent snapshot, so the caller replays against fresh state.
         """
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown merge mode {mode!r}")
         if on_bad_rows not in ("fail", "dead_letter"):
             raise ValueError(f"unknown on_bad_rows policy {on_bad_rows!r}")
         # the lsn-<lo>-<hi> id namespace is RESERVED for LsnWindowRunner:
@@ -481,10 +492,9 @@ class LakeTable:
         incoming = changes.schema
         if OP_COL not in incoming.names:
             raise ValueError("changes must carry an 'op' column (I/U/D)")
-        keys, order_cols = m.key_columns, m.order_columns
         # fail fast (before any files are written) on a batch that
         # cannot be LWW-merged at all — missing key/order columns
-        missing = [c for c in keys + order_cols if c not in incoming.names]
+        missing = [c for c in m.key_columns + m.order_columns if c not in incoming.names]
         if missing:
             raise ValueError(
                 f"changes batch {batch_id!r} lacks key/order column(s) {missing}"
@@ -507,62 +517,23 @@ class LakeTable:
         obs_in, obs_out = Observation(), Observation()
         in_stats = functools.cache(lambda: obs_in.get)
         out_stats = functools.cache(lambda: obs_out.get)
-        staged = plan.staged(changes, obs_in)
         snap_rel = f"data/snap-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
-        persisted = None
-        if mode == "cow":
-            # COW needs the touched-bucket set BEFORE reading the
-            # target → one probe job over the (persisted) batch.
-            persisted = staged.select(*plan.out_cols).persist()
-            touched = sorted(
-                r["_bucket"] for r in persisted.select("_bucket").distinct().collect()
-            )
-            if not touched:  # empty batch still commits (advances the log)
-                persisted.unpersist()
-                self._handle_bad_rows(in_stats, changes, plan.bad, batch_id, on_bad_rows)
-                return self._commit_empty(m, batch_id, schema_added)
-            target = coerce_to(
-                self.read(buckets=touched, include_deleted=True, manifest=m),
-                stored_schema,
-            ).withColumn("_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets))
-            unioned = target.withColumn("_src", F.lit(False)).unionByName(
-                persisted.withColumn("_src", F.lit(True))
-            ).withColumn("_salt", salt_expr(n_salt, *keys))
-            # ONE exchange by (bucket, salt) + sort resolves intra-batch
-            # duplicates AND batch-vs-target conflicts, pre-clustered
-            # for the bucket-partitioned write (no second shuffle).
-            merged = dedup_last_writer_colocated(
-                unioned, keys, order_cols, PART_COLS, stored_schema.names
-            )
-            out_rows = merged.observe(
-                obs_out,
-                F.sum(F.col("_src").cast("long")).alias("from_batch"),
-                F.sum((F.col("_src") & F.col(DELETED_COL)).cast("long")).alias("deletes"),
-            ).drop("_src", "_salt")
-            tier = BASE
-        else:
-            # MOR fast path: single exchange+sort straight into the
-            # delta write; the write's output directories reveal the
-            # touched buckets (no probe job).
-            out_rows = plan.winners(staged, obs_out)
-            tier = DELTA
-
+        # single exchange+sort straight into the delta write; the
+        # write's output directories reveal the touched buckets (no
+        # probe job)
         new_files, bucket_rows = self._write_snapshot(
-            out_rows, snap_rel, current_version, tier, m,
-            batch_stats=out_stats if mode == "mor" else None,
+            plan.winners(plan.staged(changes, obs_in), obs_out),
+            snap_rel, current_version, DELTA, m, batch_stats=out_stats,
         )
-        if persisted is not None:
-            persisted.unpersist()
         # bad rows surfaced by the write's observation: abort (before
         # the commit point — the just-written files orphan) or capture
         n_bad = self._handle_bad_rows(in_stats, changes, plan.bad, batch_id, on_bad_rows)
-        if mode == "mor":
-            touched = sorted(int(b) for b in new_files)
-            if not touched:
-                return self._commit_empty(m, batch_id, schema_added)
+        touched = sorted(int(b) for b in new_files)
+        if not touched:
+            return self._commit_empty(m, batch_id, schema_added)
 
         in_metrics, out_metrics = in_stats(), out_stats()
-        from_batch = int(out_metrics["rows" if mode == "mor" else "from_batch"])
+        from_batch = int(out_metrics["rows"])
         # all-null / non-integer order columns are legal — watermarks
         # just don't move
         lsn_lo = _as_lsn(in_metrics["lsn_lo"])
@@ -575,7 +546,7 @@ class LakeTable:
             rows_deduped=from_batch,
             rows_upserted=from_batch - int(out_metrics["deletes"] or 0),
             rows_deleted=int(out_metrics["deletes"] or 0),
-            touched_buckets=[int(b) for b in touched],
+            touched_buckets=touched,
             committed_at=MetaStore.now(),
             bucket_rows={b: bucket_rows[b] for b in map(str, touched) if b in bucket_rows},
         )
@@ -583,12 +554,7 @@ class LakeTable:
             version=m.version + 1,
             new_commits=[rec],
             schema_versions_added=schema_added,
-            bucket_appends=(
-                {str(b): new_files.get(str(b), []) for b in touched} if mode == "mor" else {}
-            ),
-            bucket_replaces=(
-                {str(b): new_files.get(str(b), []) for b in touched} if mode == "cow" else {}
-            ),
+            bucket_appends={str(b): new_files[str(b)] for b in touched},
             watermark_updates=(
                 {str(b): lsn_hi for b in touched} if lsn_hi >= 0 else {}
             ),
@@ -605,8 +571,8 @@ class LakeTable:
                     # committed this batch — our files stay orphaned
                     # for gc_orphans; exactly-once holds
                     return None
-                if mode != "mor" or schema_added:
-                    raise  # content depends on parent snapshot — replay
+                if schema_added:
+                    raise  # schema version numbered against the parent — replay
                 if fresh.schema_versions[-1].schema_json != current.json():
                     raise  # winner evolved the schema under us — replay
                 if (
@@ -617,44 +583,34 @@ class LakeTable:
                     # under the OLD key→bucket function, so appending
                     # them would poison bucket-pruned reads — restage
                     raise
-                m = fresh  # MOR appends commute: rebase and re-CAS
+                m = fresh  # delta appends commute: rebase and re-CAS
                 delta.version = m.version + 1
         else:
             raise ConcurrentCommitError(
                 f"batch {batch_id!r}: lost {max_commit_retries} commit races"
             )
-        if mode == "mor":
-            # inline auto-compaction is AMORTIZED: at most
-            # max_auto_compact_buckets (the worst offenders) fold per
-            # trigger, so when every bucket crosses the threshold in
-            # the same batch (steady-state wide ingest) the rewrite
-            # cost spreads over the next batches instead of stalling
-            # this one for an O(table) rewrite — the 20M-event soak
-            # showed unbounded inline compaction halving sustained
-            # throughput. Ingest-heavy deployments set
-            # compact_threshold=10**9 and schedule compact() off the
-            # critical path entirely.
-            over = sorted(
-                (
-                    (sum(1 for e in entries if e[2] == DELTA), int(b))
-                    for b, entries in self.manifest.bucket_files.items()
-                ),
-                reverse=True,
-            )
-            worst = [b for n_delta, b in over if n_delta > compact_threshold]
-            if worst:
-                try:
-                    # single attempt (see CompactionScheduler._cycle):
-                    # a lost CAS here means a concurrent pipelined
-                    # merge advanced the log — retrying would rewrite
-                    # the buckets again ON the ingest path; the next
-                    # batch re-checks the thresholds anyway
-                    self.compact(
-                        buckets=worst[:max_auto_compact_buckets],
-                        max_commit_retries=1,
-                    )
-                except ConcurrentCommitError:
-                    pass  # another writer got there; next batch re-checks
+        # inline auto-compaction is AMORTIZED: at most
+        # max_auto_compact_buckets (the worst offenders) fold per
+        # trigger, so when every bucket crosses the threshold in the
+        # same batch (steady-state wide ingest) the rewrite cost spreads
+        # over the next batches instead of stalling this one for an
+        # O(table) rewrite — the 20M-event soak showed unbounded inline
+        # compaction halving sustained throughput. Ingest-heavy
+        # deployments set compact_threshold=10**9 and schedule compact()
+        # off the critical path entirely.
+        worst = delta_heavy_buckets(self.manifest, compact_threshold)
+        if worst:
+            try:
+                # single attempt (see CompactionScheduler._cycle): a
+                # lost CAS here means a concurrent pipelined merge
+                # advanced the log — retrying would rewrite the buckets
+                # again ON the ingest path; the next batch re-checks the
+                # thresholds anyway
+                self.compact(
+                    buckets=worst[:max_auto_compact_buckets], max_commit_retries=1
+                )
+            except ConcurrentCommitError:
+                pass  # another writer got there; next batch re-checks
         return rec
 
     def _evolve(
@@ -767,7 +723,7 @@ class LakeTable:
         ``_write_aggs`` metrics; ``rows`` alone decides whether the
         write was empty. Per-file bounds degrade to the write's — sound
         (conservative) for pruning, and exact for a windowed merge,
-        where one batch IS one LSN window. Without it (COW and layout
+        where one batch IS one LSN window. Without it (layout
         rewrites), ONE distributed job scans the order and stats
         columns of the just-written files for exact per-file stats; no
         driver-side footer reads, so any Hadoop-compatible root
@@ -926,13 +882,16 @@ class LakeTable:
         versions before it goes. The tiebreak hashes the stored columns
         in read()'s order, so the fold keeps the version read() shows."""
         names = raw.columns
-        df = dedup_last_writer_colocated(
+        prev, first = colocated_lww(m.key_columns, m.order_columns, PART_COLS, names)
+        df = (
             raw.select(
                 "*",
                 bucket_expr(m.effective_bucket_columns, m.n_buckets).alias("_bucket"),
                 salt_expr(N_SALT, *m.key_columns).alias("_salt"),
-            ),
-            m.key_columns, m.order_columns, PART_COLS, names,
+            )
+            .select("*", *prev)
+            .filter(first)
+            .drop(*[f"_prev_{k}" for k in m.key_columns])
         )
         if keep is not None:
             df = df.filter(keep)
@@ -1075,15 +1034,18 @@ class LakeTable:
         like Iceberg's rewrite with a new partition spec; tombstones,
         cursors, schema history, and the GC horizon all carry over.
         Per-bucket watermarks collapse to the global max (a safe upper
-        bound — exactly-once replay uses batch ids, not watermarks)."""
+        bound — exactly-once replay uses batch ids, not watermarks).
+
+        Rebucketing to the current shape rewrites the table too: every
+        row is re-hashed, which repairs a table holding rows outside
+        their bucket (a bucket column widened before ``_evolve`` refused
+        widening), whose compactions otherwise raise."""
         m = self.manifest
         new_bcols = list(bucket_columns) if bucket_columns else m.effective_bucket_columns
         if not set(new_bcols) <= set(m.key_columns):
             raise ValueError(
                 f"bucket_columns {new_bcols} must be a subset of key_columns"
             )
-        if n_buckets == m.n_buckets and new_bcols == m.effective_bucket_columns:
-            return
         snap_rel = f"data/rebucket-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
         new_files, _ = self._fold(
             self.read(include_deleted=True, manifest=m, resolve=False),

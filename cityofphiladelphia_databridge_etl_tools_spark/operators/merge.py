@@ -12,9 +12,9 @@ Re-expresses the reference's upsert family as Spark dataflow:
   → left_anti join.
 
 Scale notes (the part that matters at 100 TB):
-- The merge shuffles only *touched* buckets of the target plus the
-  (already LWW-deduped, hence small) batch — cost is O(touched data),
-  not O(table).
+- A merge shuffles only the batch and appends its LWW winners as
+  delta files — cost is O(batch), not O(table); compaction folds a
+  bucket's deltas later, O(that bucket).
 - Hot conversations are salted before the write repartition: tasks are
   keyed by (bucket, salt) so one hot conv_id spreads over ``n_salt``
   writers while the file layout stays strictly per-bucket.
@@ -76,8 +76,8 @@ def dedup_last_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> 
     ties broken by payload hash (total order → deterministic replay).
     The keyed LWW form, for reads and queries: ``row_number() == 1``
     over a key-partitioned window, which Spark plans with a partial
-    ``WindowGroupLimit`` BEFORE the exchange. Lake writes use the
-    colocated form below instead, whose exchange is the write's.
+    ``WindowGroupLimit`` BEFORE the exchange. Lake writes use
+    ``colocated_lww`` below instead, whose exchange is the write's.
 
     Reference semantics: AGO dup-PK repair (ago/ago.py:1070-1078) and
     the "doubled up" retry reconciliation (ago/ago.py:786-822), done
@@ -101,7 +101,14 @@ def colocated_lww(
     the first — winning — row of each key run. Apply them as
     ``df.select("*", *prev).filter(first)``. Built once, the Columns can
     be reused on any frame carrying those columns (lake/table.py caches
-    them per table shape)."""
+    them per table shape).
+
+    ``part_cols`` must be a pure function of ``keys`` (e.g. (bucket,
+    salt) derived from the key hash): the window's one exchange by
+    part_cols then also clusters a bucket-partitioned write, and its
+    sort prefix satisfies the dynamic-partition writer's required
+    ordering — no second shuffle. The payload-hash tail makes the sort
+    a total order (deterministic winner on order-column ties)."""
     w = Window.partitionBy(*part_cols).orderBy(
         *[F.col(k).asc() for k in keys],
         *[F.col(c).desc_nulls_last() for c in order_cols],
@@ -112,27 +119,6 @@ def colocated_lww(
     for k in keys:
         first = first | F.col(f"_prev_{k}").isNull() | (F.col(f"_prev_{k}") != F.col(k))
     return prev, first
-
-
-def dedup_last_writer_colocated(
-    df: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    part_cols: list[str],
-    tiebreak_cols: list[str],
-) -> DataFrame:
-    """LWW dedup when ``part_cols`` is a pure function of ``keys``
-    (e.g. (bucket, salt) derived from the key hash): exchange once by
-    part_cols, sort (part_cols, keys, order desc), keep the first row
-    of each key run via lag — no second shuffle for a downstream
-    bucket-partitioned write, and the sort prefix satisfies the
-    dynamic-partition writer's required ordering. This halves the
-    shuffles of the merge hot path. The payload-hash tail makes the
-    sort a total order (deterministic winner on order-column ties);
-    it hashes ``tiebreak_cols`` (see payload_tiebreak).
-    """
-    prev, first = colocated_lww(keys, order_cols, part_cols, tiebreak_cols)
-    return df.select("*", *prev).filter(first).drop(*[f"_prev_{k}" for k in keys])
 
 
 def delete_stale(

@@ -28,13 +28,11 @@ class LsnWindowRunner:
         table: LakeTable,
         source: Callable[[int, int], DataFrame],
         events_per_batch: int = 1_000_000,
-        mode: str = "mor",
         merge_kwargs: dict | None = None,
     ):
         self.table = table
         self.source = source
         self.events_per_batch = events_per_batch
-        self.mode = mode
         # forwarded to merge_batch — e.g. compact_threshold=10**9 to
         # disable inline folding when a CompactionScheduler owns
         # maintenance off the ingest path (lake/maintenance.py)
@@ -74,8 +72,8 @@ class LsnWindowRunner:
         ``pipeline_depth > 1`` submits that many windows concurrently
         from driver threads, so one window's shuffle/sort/write
         overlaps another's — the scheduler interleaves their stages
-        across idle slots. Requires MOR: delta-file appends and
-        max-merged watermarks COMMUTE, so whichever writer loses the
+        across idle slots. Delta-file appends and max-merged
+        watermarks COMMUTE, so whichever writer loses the
         log-position CAS rebases and re-commits automatically
         (lake/table.py merge retry); batch ids stay the exactly-once
         guard. LWW ordering is (ts, lsn), not commit order, so the
@@ -90,7 +88,7 @@ class LsnWindowRunner:
         def apply(w):
             wlo, whi = w
             return self.table.merge_batch(
-                self.source(wlo, whi), f"lsn-{wlo}-{whi}", mode=self.mode,
+                self.source(wlo, whi), f"lsn-{wlo}-{whi}",
                 _lsn_window_issued=True,  # the runner OWNS the lsn-* id namespace
                 **self.merge_kwargs,
             )
@@ -98,11 +96,6 @@ class LsnWindowRunner:
         if pipeline_depth <= 1:
             records = [apply(w) for w in windows]
         else:
-            if self.mode != "mor":
-                raise ValueError(
-                    "pipelined ingest requires mode='mor' (COW commits do not "
-                    "commute, so a lost race needs a replay, not a rebase)"
-                )
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=pipeline_depth) as ex:

@@ -46,16 +46,14 @@ def test_single_batch_matches_oracle(spark, tmp_path):
     assert_df_equal(t.read(), changegen.expected_final_state(stream))
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_multi_batch_replay_equals_reference(spark, tmp_path, mode):
+def test_multi_batch_replay_equals_reference(spark, tmp_path):
     """Split one stream into 4 lsn-window batches; applying them in
-    order must equal one-shot replay of the whole stream — under both
-    copy-on-write and merge-on-read strategies."""
+    order must equal one-shot replay of the whole stream."""
     t = make_table(spark, tmp_path)
     full = changegen.changes(spark, 4000, seed=2)
     for k in range(4):
         batch = full.filter((F.col("lsn") >= k * 1000) & (F.col("lsn") < (k + 1) * 1000))
-        t.merge_batch(batch, f"b{k}", mode=mode)
+        t.merge_batch(batch, f"b{k}")
     assert_df_equal(t.read(), changegen.expected_final_state(full))
     # lineage: commit log recorded all four batches with lsn ranges
     m = t.manifest
@@ -112,12 +110,16 @@ def test_delete_then_late_update_stays_deleted(spark, tmp_path):
     def df(rows):
         return spark.createDataFrame(rows, schema).withColumn("ts", F.col("ts").cast("timestamp"))
 
-    t.merge_batch(df([("c1", 0, "user", "hello", None, "2024-01-01 10:00:00", 1, "I")]), "b1", mode="cow")
-    t.merge_batch(df([("c1", 0, None, None, None, "2024-01-01 12:00:00", 2, "D")]), "b2", mode="mor")
-    t.merge_batch(df([("c1", 0, "user", "late", None, "2024-01-01 11:00:00", 3, "U")]), "b3", mode="cow")
+    t.merge_batch(df([("c1", 0, "user", "hello", None, "2024-01-01 10:00:00", 1, "I")]), "b1")
+    t.compact()  # the row to delete is a BASE row
+    assert [e[2] for v in t.manifest.bucket_files.values() for e in v] == ["base"]
+    t.merge_batch(df([("c1", 0, None, None, None, "2024-01-01 12:00:00", 2, "D")]), "b2")
+    t.merge_batch(df([("c1", 0, "user", "late", None, "2024-01-01 11:00:00", 3, "U")]), "b3")
+    assert t.read().count() == 0
+    t.compact()  # the fold keeps the tombstone, which still wins
     assert t.read().count() == 0
     # ...but a genuinely newer update does resurrect
-    t.merge_batch(df([("c1", 0, "user", "reborn", None, "2024-01-01 13:00:00", 4, "U")]), "b4", mode="mor")
+    t.merge_batch(df([("c1", 0, "user", "reborn", None, "2024-01-01 13:00:00", 4, "U")]), "b4")
     out = t.read().collect()
     assert len(out) == 1 and out[0]["text"] == "reborn"
 
@@ -205,7 +207,7 @@ def test_mor_auto_compaction_bounds_deltas(spark, tmp_path):
     for k in range(12):
         t.merge_batch(
             full.filter((F.col("lsn") >= k * 100) & (F.col("lsn") < (k + 1) * 100)),
-            f"b{k}", mode="mor", compact_threshold=4,
+            f"b{k}", compact_threshold=4,
         )
     m = t.manifest
     for b, entries in m.bucket_files.items():
@@ -679,7 +681,7 @@ def test_background_compaction_scheduler_off_path(spark, tmp_path):
         def apply(w):
             wlo, whi = w
             return t.merge_batch(
-                src(wlo, whi), f"lsn-{wlo}-{whi}", mode="mor",
+                src(wlo, whi), f"lsn-{wlo}-{whi}",
                 compact_threshold=10**9,  # inline folding OFF — scheduler owns it
                 _lsn_window_issued=True,
             )
@@ -1049,7 +1051,8 @@ def test_compaction_refuses_rows_outside_its_buckets(spark, tmp_path):
     """A table whose bucket column was widened before that was refused
     stores versions of a key in two buckets. A partial compaction
     rewrites some of them into buckets it does not replace; committing
-    only its targets would drop those rows, so it commits nothing."""
+    only its targets would drop those rows, so it commits nothing.
+    Rebucketing to the same shape re-hashes every row and repairs it."""
     from cityofphiladelphia_databridge_etl_tools_spark.lake.manifest import (
         LogDelta, MetaStore, SchemaVersion,
     )
@@ -1069,3 +1072,11 @@ def test_compaction_refuses_rows_outside_its_buckets(spark, tmp_path):
     with pytest.raises(ValueError, match="nothing was committed"):
         t.compact(buckets=[0, 1, 2, 3])
     assert t.manifest.to_json() == m_before
+
+    t.rebucket(t.manifest.n_buckets)
+    t.compact(buckets=[0, 1, 2, 3])
+    assert sorted((r["k"], r["v"]) for r in t.read().collect()) == [
+        (i, f"b{i}") for i in range(200)
+    ]
+    for k in (0, 77, 199):
+        assert [r["v"] for r in t.read_key(k).collect()] == [f"b{k}"]

@@ -1,7 +1,7 @@
 """Property-based merge testing: ANY sequence of I/U/D events over a
-tiny key space, split into arbitrary batches under arbitrary
-cow/mor modes, must converge to the same state as a trivial
-last-writer-wins dict model. Hypothesis shrinks failures to minimal
+tiny key space, split into arbitrary batches, each optionally folded
+into base right after its merge, must converge to the same state as a
+trivial last-writer-wins dict model. Hypothesis shrinks failures to minimal
 counterexamples — the cheapest path to corner cases (equal
 timestamps, delete-first streams, single-key floods, replays)."""
 
@@ -35,6 +35,18 @@ def model_replay(events):
     }
 
 
+def merge_and_maybe_fold(t, batch, batch_id, fold):
+    """Merge one batch; with ``fold``, compact the buckets it touched
+    at once (the read-optimised recipe) and check they are base-only."""
+    rec = t.merge_batch(batch, batch_id)
+    if fold and rec is not None:
+        t.compact(buckets=rec.touched_buckets)
+        m = t.manifest
+        tiers = {e[2] for b in rec.touched_buckets for e in m.bucket_files.get(str(b), [])}
+        assert tiers <= {"base"}, tiers
+    return rec
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -43,10 +55,10 @@ def model_replay(events):
 @given(
     events=st.lists(EVENT, min_size=1, max_size=14),
     cuts=st.lists(st.integers(min_value=1, max_value=13), max_size=2),
-    modes=st.lists(st.sampled_from(["cow", "mor"]), min_size=3, max_size=3),
+    fold_after=st.lists(st.booleans(), min_size=3, max_size=3),
     replay_batch0=st.booleans(),
 )
-def test_any_stream_matches_lww_model(spark, events, cuts, modes, replay_batch0):
+def test_any_stream_matches_lww_model(spark, events, cuts, fold_after, replay_batch0):
     rows = [
         (conv, turn, "r", f"text-{lsn}", None, ts, lsn, op)
         for lsn, (conv, turn, op, ts) in enumerate(events)
@@ -73,7 +85,7 @@ def test_any_stream_matches_lww_model(spark, events, cuts, modes, replay_batch0)
         if hi <= lo:
             continue
         batch = df.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi))
-        t.merge_batch(batch, f"b{i}", mode=modes[i % len(modes)])
+        merge_and_maybe_fold(t, batch, f"b{i}", fold_after[i % len(fold_after)])
         lo = hi
     if replay_batch0 and bounds[0] > 0:
         # duplicate delivery of an already-committed batch id → no-op
@@ -120,14 +132,14 @@ def model_replay_with_ties(events, tiebreak):
 )
 @given(
     events=st.lists(TIED_EVENT, min_size=2, max_size=10),
-    modes=st.lists(st.sampled_from(["cow", "mor"]), min_size=3, max_size=3),
+    fold_after=st.lists(st.booleans(), min_size=3, max_size=3),
 )
 # a tie inside one batch, and a tie across two batches that read()
 # resolves and compaction folds (each once picked a different winner
 # than read() when merge/compaction hashed _bucket/_salt too)
-@example(events=[("b", 0, "I", 0, 0, 0), ("b", 0, "U", 0, 0, 0)], modes=["mor", "cow", "mor"])
-@example(events=[("b", 1, "I", 0, 0, 0), ("b", 1, "U", 0, 0, 1)], modes=["mor", "mor", "mor"])
-def test_order_column_ties_pick_one_winner_on_every_path(spark, events, modes):
+@example(events=[("b", 0, "I", 0, 0, 0), ("b", 0, "U", 0, 0, 0)], fold_after=[False, True, False])
+@example(events=[("b", 1, "I", 0, 0, 0), ("b", 1, "U", 0, 0, 1)], fold_after=[False, False, False])
+def test_order_column_ties_pick_one_winner_on_every_path(spark, events, fold_after):
     """Events that tie on (ts, lsn) with different payloads, spread over
     batches: merge→read, merge→compact→read and pipelined windows all
     agree with the model on which version survives."""
@@ -176,7 +188,9 @@ def test_order_column_ties_pick_one_winner_on_every_path(spark, events, modes):
 
     t = new_table()
     for b in range(3):
-        t.merge_batch(tagged.filter(F.col("b") == b).drop("b", "i"), f"b{b}", mode=modes[b])
+        merge_and_maybe_fold(
+            t, tagged.filter(F.col("b") == b).drop("b", "i"), f"b{b}", fold_after[b]
+        )
     assert state(t) == want, "merge→read"
     t.compact()
     assert state(t) == want, "merge→compact→read"

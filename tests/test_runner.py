@@ -65,9 +65,6 @@ def test_pipelined_ingest_converges(spark, tmp_path):
     assert_df_equal(t.read(), changegen.expected_final_state(full))
     # replay after the fact is still a no-op
     assert runner.run_until(2000, pipeline_depth=3) == []
-    import pytest
-    with pytest.raises(ValueError, match="mor"):
-        LsnWindowRunner(t, source, mode="cow").run_until(2000, pipeline_depth=2)
 
 
 def test_read_key_point_lookup_prunes_to_one_bucket(spark, tmp_path):
@@ -148,7 +145,7 @@ def test_hot_key_salting_spreads_files(spark, tmp_path):
     hot = changegen.changes(
         spark, 300_000, seed=44, hot_frac=1.0, n_hot=1, max_turns=50_000
     )
-    t.merge_batch(hot, "hot", n_salt=4, mode="mor")
+    t.merge_batch(hot, "hot", n_salt=4)
     m = t.manifest
     # all rows land in one bucket (single conv) ...
     assert len(m.bucket_files) == 1
